@@ -130,8 +130,8 @@ object Bench {
     // covers even a kill.
     // The artifact discloses `runs_completed` so cross-round compares
     // know which semantics they are reading. Committed sweeps raise
-    // the wall (tools/sweep_r15.sh) so the repo artifacts keep the
-    // min-of-3 semantics every committed sweep since r9 has used.
+    // the wall (tools/sweep.sh) so the repo artifacts keep the
+    // min-of-3 semantics.
     // SPARK_GRAFT_BENCH_RUNS=1 IS honored (ADVICE r15 #4): a dev loop
     // may want a single cold pass; runs_completed=1 in the artifact
     // discloses the weaker semantics, and the per-pass checkpoint

@@ -2,6 +2,9 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
+import graft.functions.{CosineFusionRule, GraftFunctions}
+import graft.plans.GroupedTopKStrategy
+
 /** User-facing session factory: one place that wires the graft
   * extensions (native expressions) and the confs the engine is
   * designed around. On a real cluster the same builder is used minus
@@ -38,6 +41,10 @@ object GraftSession {
       // while genuinely wide tables — a 100 TB fact table's thousands
       // of date partitions — still cross the threshold and fan out.
       .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "1024")
+      // read TIMESTAMP(NANOS) parquet columns as longs, which
+      // Tables.events normalizes; set for the session's whole life, so
+      // no read flips how later reads see nanosecond timestamps
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     master.map(b.master).getOrElse(b)
   }
 
@@ -60,6 +67,20 @@ object GraftSession {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
+    withGraft(s)
+  }
+
+  /** The one check-before-inject guard at session entry. A session
+    * that already existed when `getOrCreate` ran never applied the
+    * builder's extensions conf; it gets the same functions, rule and
+    * strategy `GraftExtensions` injects, once. A session that has them
+    * is returned untouched, so operators never register per call. */
+  private def withGraft(s: SparkSession): SparkSession = {
+    if (!s.sessionState.planner.strategies.contains(GroupedTopKStrategy)) {
+      GraftFunctions.register(s)
+      s.experimental.extraOptimizations :+= CosineFusionRule
+      s.experimental.extraStrategies :+= GroupedTopKStrategy
+    }
     s
   }
 }

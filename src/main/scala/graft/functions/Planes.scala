@@ -66,7 +66,6 @@ object Planes {
     * is validated by dimsOf; the kernel derives it per row. */
   def withSigs(df: DataFrame, embCol: String, tables: Int, planesPerTable: Int,
       dims: Int): DataFrame = {
-    GraftFunctions.register(df.sparkSession)
     df.select(col("*"),
         posexplode(expr(s"graft_lsh_sigs($embCol, $tables, $planesPerTable)")))
       .withColumnRenamed("pos", "table").withColumnRenamed("col", "sig")

@@ -87,7 +87,6 @@ object Dedup {
     * to the matched sliver; output is bit-identical to [[incremental]]
     * (same oracle row; parity spec). */
   def incrementalBloom(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val (batch, snapFp) = crawlBatchAndSnapshot(s, dir)
     val bloom = snapFp
       .agg(expr("graft_bloom_agg(xxhash64(fp), 100000L, 960000L)").as("bf"))
@@ -120,7 +119,6 @@ object Dedup {
     * explicitly (the [[lshVerified]] argument, restricted to a subset
     * of the same pair universe). */
   def incrementalNear(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val d = Tables.documentsParallel(s, dir)
       .select(col("doc_id"), col("source"), split(col("text"), " ").as("w"))
       .select(col("doc_id"), col("source"), shinglesFromWords(col("w")).as("sh"))
@@ -196,7 +194,6 @@ object Dedup {
     * params in functions.HashParams equal `perms`, so signatures are
     * bit-identical to the explode+agg formulation.) */
   def minhashSignatures(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     docShingles(s, dir)
       .selectExpr("doc_id",
         s"graft_minhash(transform(sh, x -> xxhash64(x)), $MinhashK) AS sig")
@@ -205,7 +202,6 @@ object Dedup {
   /** MinHash LSH candidate pairs: band the signature, equi-join on
     * (band index, band hash), estimate jaccard from signature overlap. */
   def minhashLsh(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     minhashLshOver(docShingles(s, dir))
   }
 
@@ -278,7 +274,6 @@ object Dedup {
     * DedupSimilaritySpec full-recall test. A recall break therefore
     * fails loudly in the gate rather than silently dropping pairs. */
   def lshVerified(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     lshVerifiedOver(docShingles(s, dir))
   }
 
@@ -377,7 +372,6 @@ object Dedup {
   def buildCascadeLineage(s: SparkSession, dir: String,
       base: String): Unit = {
     cascadeBuilds.incrementAndGet()
-    graft.functions.GraftFunctions.register(s)
     val corpus = recrawlCorpus(s, dir)
     val fps = corpus.select(col("doc_id"), unhex(md5(col("text"))).as("fp"))
     val reps = fps.groupBy(col("fp")).agg(min(col("doc_id")).as("rep"))
@@ -422,7 +416,6 @@ object Dedup {
     * cascade's exactness spec compare against. */
   private[graft] def cascadeRecomputeOver(s: SparkSession,
       corpus: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val fps = corpus.select(col("doc_id"), unhex(md5(col("text"))).as("fp"))
     val reps = fps.groupBy(col("fp")).agg(min(col("doc_id")).as("rep"))
     val docRep = fps.join(reps, "fp").select(col("doc_id"), col("rep"))
@@ -442,7 +435,6 @@ object Dedup {
     * scale claim as a measurable number. */
   private[graft] def cascadeCandidateCounts(s: SparkSession,
       dir: String): (Long, Long, Long) = {
-    graft.functions.GraftFunctions.register(s)
     val corpus = recrawlCorpus(s, dir)
     val reps = corpus.select(col("doc_id"), unhex(md5(col("text"))).as("fp"))
       .groupBy(col("fp")).agg(min(col("doc_id")).as("rep"))
@@ -501,7 +493,6 @@ object Dedup {
   def buildCascadeSnapshot(s: SparkSession, dir: String,
       base: String): Unit = {
     cascadeBuilds.incrementAndGet()
-    graft.functions.GraftFunctions.register(s)
     val (snap, _) = cascadeSnapshotAndBatch(s, dir)
     val fps = snap.select(col("doc_id"), unhex(md5(col("text"))).as("fp"))
     val fpRep = fps.groupBy(col("fp")).agg(min(col("doc_id")).as("rep"))
@@ -591,7 +582,6 @@ object Dedup {
     * is touched only to verify the bounded candidate set. */
   private[graft] def cascadeIncrementalChain(s: SparkSession,
       dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val base = stagedCascadeSnapshot(s, dir)
     val (snap, batch) = cascadeSnapshotAndBatch(s, dir)
     val fpRep = s.read.parquet(s"$base/fp_rep")
@@ -682,7 +672,6 @@ object Dedup {
     * a strict subset. */
   private[graft] def cascadeIncCandidateCounts(s: SparkSession,
       dir: String): (Long, Long, Long) = {
-    graft.functions.GraftFunctions.register(s)
     val (snap, batch) = cascadeSnapshotAndBatch(s, dir)
     val union = snap.unionByName(batch)
     val fps = union.select(col("doc_id"), unhex(md5(col("text"))).as("fp"))
@@ -1204,7 +1193,6 @@ object Dedup {
     * per-bit ±1 vote over word-unigram xxhash64, ONE narrow map — no
     * explode, no 64-column agg, no shuffle. */
   def simhashSignatures(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     Tables.documentsParallel(s, dir)
       .select(col("doc_id"), split(col("text"), " ").as("w"))
       .selectExpr("doc_id", "graft_simhash64(transform(w, x -> xxhash64(x))) AS simhash")
@@ -1258,7 +1246,6 @@ object Dedup {
     * embeddingLsh — excluded from the bench; the LSH path below is the
     * production shape. */
   def embedding(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val e = Tables.embeddingsParallel(s, dir)
     val a = e.select(col("vec_id").as("vec_a"), col("embedding").as("emb_a"))
     val b = e.select(col("vec_id").as("vec_b"), col("embedding").as("emb_b"))
@@ -1283,7 +1270,6 @@ object Dedup {
     * This replaces `embedding` as the benched production operator —
     * the all-pairs twin would simply not run at 100 TB. */
   def embeddingLsh(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val e = Tables.embeddingsParallel(s, dir)
       .select(col("vec_id"), col("embedding"))
     val dims = graft.functions.Planes.dimsOf(Tables.embeddings(s, dir), "embedding")
@@ -1321,7 +1307,6 @@ object Dedup {
     * oracle replicates the bucket-size filter as a HAVING CTE, so the
     * knob's exact semantics are hash-gated, not just spec-asserted. */
   def embeddingLshCapped(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val base = Tables.embeddingsParallel(s, dir).select(col("vec_id"), col("embedding"))
     // one bounded driver-side row: the planted vector becomes a literal,
     // keeping the whole plan narrow (no 40×1 nested-loop join)

@@ -294,7 +294,6 @@ object Multimodal {
     // self-sufficient registration: a filtered Verify run may reach
     // this gate before any similarity/dedup query has registered the
     // graft_* functions on the session
-    graft.functions.GraftFunctions.register(s)
     val srcId =
       if (planted)
         when(col("doc_id") % 13 === 0, lit(0L))
@@ -357,7 +356,6 @@ object Multimodal {
     * clique's sample lattice disjoint from every organic variant's. */
   private[graft] def phashTableUnicode(s: SparkSession, dir: String,
       fused: Boolean = true): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val isEmpty = col("doc_id") % 17 === 0 &&
       col("doc_id") < PhashUnicodeEmptyBound
     val isClique = col("doc_id") % 7 === 3 && !isEmpty
@@ -634,7 +632,6 @@ object Multimodal {
     * exchange (the pair join) and the bar costs one map-side-combined
     * aggregate, so the pass scales linearly with the pair count. */
   def clipFilter(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val e = Tables.embeddings(s, dir)
     val txt = e.filter(col("vec_id") % 2 === 0)
       .select(expr("vec_id div 2").as("pair_id"), col("embedding").as("t_emb"))

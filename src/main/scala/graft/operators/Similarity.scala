@@ -33,13 +33,11 @@ object Similarity {
   val K = 5
 
   private def queries(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     Tables.embeddings(s, dir).filter(col("vec_id") < 10)
       .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
   }
 
   private def corpus(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     Tables.embeddingsParallel(s, dir).filter(col("vec_id") >= 10)
       .select(col("vec_id").as("cand_id"), col("embedding").as("c_emb"))
   }
@@ -168,7 +166,6 @@ object Similarity {
     * query's own scale is constant per query group), one double
     * multiply → bit-identical in DuckDB, so the row is hash-exact. */
   def rerankTopK(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     def coded(df: DataFrame, embc: String): DataFrame = df
       .withColumn("demb", expr(s"transform($embc, x -> CAST(x AS DOUBLE))"))
       .withColumn("amax", array_max(expr("transform(demb, x -> abs(x))")))
@@ -213,7 +210,6 @@ object Similarity {
     * sequential-fold cosine are bit-identical to DuckDB list slicing,
     * so the row is hash-exact. */
   def matryoshkaTopK(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val q = queries(s, dir)
       .select(col("query_id"), slice(col("q_emb"), 1, MatPrefixDims).as("q_pre"))
     val c = corpus(s, dir)
@@ -337,7 +333,6 @@ object Similarity {
   private[graft] def kmeansCentroidBuildFrom(s: SparkSession,
       vecs: DataFrame): Seq[(Long, Seq[Float])] = {
     trainingBuilds.incrementAndGet()
-    graft.functions.GraftFunctions.register(s)
     val corpusV = vecs.select(col("vec_id"), col("embedding"))
     val n = corpusV.count()
     val stride = ivfSeedStride(n)
@@ -495,7 +490,6 @@ object Similarity {
     * one. */
   private def ivfServeFrom(s: SparkSession, base: String,
       qdf: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val cents = readCentroids(s, s"$base/centroids")
     val postings = s.read
       .schema("cand_id BIGINT, c_emb ARRAY<FLOAT>, cent_id BIGINT")
@@ -577,7 +571,6 @@ object Similarity {
   /** The snapshot half: quantizer + snapshot postings (last night's
     * state). */
   def buildIvfIncSnapshot(s: SparkSession, dir: String, base: String): String = {
-    graft.functions.GraftFunctions.register(s)
     writeIvfIndex(s, base,
       kmeansCentroidSeqFiltered(s, dir, s"NOT ($IvfIncBatchPred)"),
       corpus(s, dir).filter(!expr(IvfIncBatchPred)))
@@ -597,7 +590,6 @@ object Similarity {
     * frozen artifact centroids. */
   private def ivfIncAssigned(s: SparkSession, base: String,
       vecs: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     assignNearestNarrow(vecs, readCentroids(s, s"$base/centroids"),
       "cand_id", "c_emb")
   }
@@ -698,7 +690,6 @@ object Similarity {
     * FILES rows come from, never the rows. */
   private[graft] def ivfServeUnion(s: SparkSession, dir: String,
       snapBase: String, deltaBase: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val cents = readCentroids(s, s"$snapBase/centroids")
     def posts(b: String) = s.read
       .schema("cand_id BIGINT, c_emb ARRAY<FLOAT>, cent_id BIGINT")
@@ -1585,7 +1576,6 @@ object Similarity {
       // skewed-artifact consult passes tonight's ACTUAL (drifted)
       // arrivals; defaults to the raw table
       corpusOpt: Option[DataFrame] = None): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val cents = readCentroids(s, s"$base/centroids")
     val best = array_max(transform(typedLit(cents), c =>
       call_function("graft_cosine", col("c_emb"), c.getField("_2"))))
@@ -1605,7 +1595,6 @@ object Similarity {
 
   def ivfIncRetrainSignal(s: SparkSession, dir: String,
       batch: Option[DataFrame] = None): (Double, Boolean) = {
-    graft.functions.GraftFunctions.register(s)
     val cents = kmeansCentroidSeqFiltered(s, dir, s"NOT ($IvfIncBatchPred)")
     def meanBestCos(df: DataFrame): Double = {
       val best = array_max(transform(typedLit(cents), c =>
@@ -1641,7 +1630,6 @@ object Similarity {
     * Lloyd SQL) so the gate is still hash-exact, not recall-trusted.
     * Output: every vector with its cluster and kept/removed verdict. */
   def semanticDedup(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val cents = kmeansCentroidSeq(s, dir)
     val vecs = Tables.embeddingsParallel(s, dir)
       .select(col("vec_id"), col("embedding"))
@@ -1667,7 +1655,6 @@ object Similarity {
     * centroids + (vec_id, embedding, cent_id, kept) — persisted so the
     * nightly job owns zero training state. */
   def buildSemIncSnapshot(s: SparkSession, dir: String, base: String): String = {
-    graft.functions.GraftFunctions.register(s)
     import s.implicits._
     val cents = kmeansCentroidSeqFiltered(s, dir, s"NOT ($IvfIncBatchPred)")
     cents.map { case (cid, emb) => (cid, emb.toArray) }
@@ -1713,7 +1700,6 @@ object Similarity {
     * Lloyd trained without the batch, is_batch-then-vec_id precedence)
     * — hash-exact, so the incremental path is proven lossless. */
   def semanticDedupIncremental(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val base = stagedSemIncSnapshot(s, dir)
     val cents = readCentroids(s, s"$base/centroids")
     val snap = s.read
@@ -1905,7 +1891,6 @@ object Similarity {
     * driver-resident ≤ PqCodewords book (~4 KB literal), so the only
     * shuffle in the whole query is the bounded top-k partial agg. */
   def pqTopK(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val book = pqCodebook(s, dir)
     require(book.nonEmpty, "empty PQ codebook")
     val sub = book.head._2.length / PqSubspaces
@@ -1934,7 +1919,6 @@ object Similarity {
     * (unrolled-Lloyd centroids, stride codebook, shared cosine fold),
     * so the composed oracle is hash-exact too. */
   def ivfPqTopK(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val cents = kmeansCentroidSeq(s, dir)
     val book = pqCodebook(s, dir)
     require(book.nonEmpty, "empty PQ codebook")
@@ -2044,7 +2028,6 @@ object Similarity {
       // the exact-refine stage reads raw embeddings; the retrained
       // index's corpus is the DRIFTED relation, not the raw table
       refineCorpus: Option[DataFrame] = None): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val cents = readCentroids(s, s"$artifactBase/centroids")
     val book = readCodebook(s, s"$artifactBase/codebook")
     require(book.zipWithIndex.forall { case ((cid, _), i) => cid == i.toLong },
@@ -2083,7 +2066,6 @@ object Similarity {
   }
 
   def buildIvfPqIncSnapshot(s: SparkSession, dir: String, base: String): String = {
-    graft.functions.GraftFunctions.register(s)
     val pred = s"NOT ($IvfIncBatchPred)"
     writeIvfPqIndex(s, base,
       kmeansCentroidSeqFiltered(s, dir, pred),
@@ -2105,7 +2087,6 @@ object Similarity {
     * artifact centroids AND codebook (zero training state). */
   private def ivfPqIncEncoded(s: SparkSession, base: String,
       vecs: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val frozen = readCentroids(s, s"$base/centroids")
     val book = readCodebook(s, s"$base/codebook")
     val sub = book.head._2.length / PqSubspaces
@@ -2299,7 +2280,6 @@ object Similarity {
     * (shifted) arrivals. Artifact codebook only, zero training. */
   private[graft] def ivfPqIncDriftReportFrom(s: SparkSession, dir: String,
       base: String, batchVecs: Option[DataFrame] = None): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val book = readCodebook(s, s"$base/codebook")
     val sub = book.head._2.length / PqSubspaces
     def meanQ(df: DataFrame): DataFrame = {
@@ -2324,7 +2304,6 @@ object Similarity {
     * retrain branch on a planted shifted batch). */
   def ivfPqIncRetrainSignal(s: SparkSession, dir: String,
       batch: Option[DataFrame] = None): (Double, Boolean) = {
-    graft.functions.GraftFunctions.register(s)
     val book = pqCodebookFiltered(s, dir, s"NOT ($IvfIncBatchPred)")
     val sub = book.head._2.length / PqSubspaces
     def meanRecon(df: DataFrame): Double = {
@@ -2359,7 +2338,6 @@ object Similarity {
     * window sort of the candidate set). Hash-exact DuckDB oracle
     * replicates the plane bits (graft.functions.Planes). */
   def knnGraph(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val e = Tables.embeddingsParallel(s, dir).select(col("vec_id"), col("embedding"))
     val dims = Planes.dimsOf(Tables.embeddings(s, dir), "embedding")
     val sigs = Planes.withSigs(e, "embedding", KnnTables, KnnPlanes, dims)
@@ -2436,7 +2414,6 @@ object Similarity {
     * top-k edge list WITH scores (what the merge re-elects over). */
   def buildIncGraphLineage(s: SparkSession, dir: String,
       base: String): String = {
-    graft.functions.GraftFunctions.register(s)
     val all = Tables.embeddingsParallel(s, dir)
       .select(col("vec_id"), col("embedding"))
     val dims = Planes.dimsOf(Tables.embeddings(s, dir), "embedding")
@@ -2473,7 +2450,6 @@ object Similarity {
     * k-bounded re-election), not with corpus age — the
     * dedup_components_incremental contract applied to the ANN graph. */
   def knnGraphIncremental(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val all = Tables.embeddingsParallel(s, dir)
       .select(col("vec_id"), col("embedding"))
     val dims = Planes.dimsOf(Tables.embeddings(s, dir), "embedding")
@@ -2809,7 +2785,6 @@ object Similarity {
     * and Q queries must cost ONE pass of each arm, not Q). */
   private[graft] def hybridIndexBatchTopKFor(s: SparkSession, dir: String,
       queryDocs: Seq[Long]): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     hybridBatchFusions.incrementAndGet()
     import s.implicits._
     val lexBase = TextAnalysis.stagedBm25Index(s, dir)
@@ -2910,7 +2885,6 @@ object Similarity {
     * serving paths (BM25 postings, the persisted IVF index); fusion
     * cost is O(depth), independent of corpus size. */
   def hybridRrfTopK(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val rankW = Window.orderBy(col("side_q").desc, col("doc_id"))
     // ---- lexical arm (BM25, query terms from the query doc) ----
     val (tfs, lens, stats) = TextAnalysis.bm25Stats(s, dir)
@@ -3029,7 +3003,6 @@ object Similarity {
   private[graft] def hybridIndexTopKFor(s: SparkSession, dir: String,
       queryDoc: Long, lexBaseOpt: Option[String] = None,
       ivfBaseOpt: Option[String] = None): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val rankW = Window.orderBy(col("side_q").desc, col("doc_id"))
     // ---- lexical arm: staged BM25 postings index ----
     val qterms = Tables.documents(s, dir)

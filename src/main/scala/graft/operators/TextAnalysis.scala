@@ -547,7 +547,6 @@ object TextAnalysis {
     * scalars); sizing covers the eval gram count at gate SFs with a
     * ~1% fpp and scales by the `items` knob, not the plan. */
   def decontaminateBloom(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val n = DecontamN
     val d = Tables.documentsParallel(s, dir)
       .select(col("doc_id"), split(col("text"), " ").as("w"))

@@ -77,13 +77,7 @@ object GroupedTopK {
       s"GroupedTopK needs (long|string, long, double), got " +
         s"(${g.dataType}, ${i.dataType}, ${sc.dataType})")
     val rank = AttributeReference("rank", LongType, nullable = false)()
-    // mirror GraftFunctions.register: usable on sessions built without
-    // the GraftExtensions conf (idempotent — public extraStrategies API)
-    val ss = df.sparkSession
-    if (!ss.experimental.extraStrategies.contains(GroupedTopKStrategy))
-      ss.experimental.extraStrategies =
-        ss.experimental.extraStrategies :+ GroupedTopKStrategy
-    org.apache.spark.sql.GraftPlanBridge.ofRows(ss,
+    org.apache.spark.sql.GraftPlanBridge.ofRows(df.sparkSession,
       GroupedTopKNode(g, i, sc, k, rank, plan))
   }
 }

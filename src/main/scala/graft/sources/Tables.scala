@@ -13,8 +13,32 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  /** The read behind every table loader. A bare
+    * `spark.read.parquet(path)` infers the schema with a Spark job
+    * (`parallelize → mapPartitions → collect`, even for a one-file
+    * table) before the query's own action: fixed scheduler cost on
+    * every read, at any data size. The first read of
+    * a table version infers with Spark's own reader; later reads pass
+    * that schema back, which plans the same relation without the job.
+    * The memo revalidates against the table's file listing on every
+    * read, and its key carries the confs that change what inference
+    * returns, so a re-staged table or such a conf re-infers. */
+  def load(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    val key = s"schema|$path|${inferenceConfs(spark)}"
+    val schema = ArtifactHeaders.cached(spark, key, path)(spark.read.parquet(path).schema)
+    spark.read.schema(schema).parquet(path)
+  }
+
+  /** The session's explicitly set confs that parquet schema inference
+    * reads: `spark.sql.parquet.*` (binaryAsString, int96AsTimestamp,
+    * inferTimestampNTZ, mergeSchema, ...), `spark.sql.legacy.parquet.*`
+    * (nanosAsLong) and `spark.sql.caseSensitive`. */
+  private def inferenceConfs(s: SparkSession): String =
+    s.conf.getAll.iterator.filter { case (k, _) =>
+      k.startsWith("spark.sql.parquet.") || k.startsWith("spark.sql.legacy.parquet.") ||
+        k == "spark.sql.caseSensitive"
+    }.toSeq.sorted.mkString(",")
 
   def lineitem(s: SparkSession, d: String): DataFrame = load(s, d, "lineitem")
   def orders(s: SparkSession, d: String): DataFrame = load(s, d, "orders")
@@ -24,9 +48,10 @@ object Tables {
   def nation(s: SparkSession, d: String): DataFrame = load(s, d, "nation")
   def region(s: SparkSession, d: String): DataFrame = load(s, d, "region")
   /** events.ts has shipped in three parquet vintages: TIMESTAMP(NANOS)
-    * (which Spark's vectorized reader rejects — read nanos as long via
-    * the legacy conf and truncate to microsecond TimestampType, the
-    * same truncation DuckDB applies), TIMESTAMP(MICROS, adjustedToUTC)
+    * (which Spark's vectorized reader rejects — read as long through
+    * the legacy nanosAsLong conf GraftSession sets, then truncated to
+    * microsecond TimestampType, the same truncation DuckDB applies),
+    * TIMESTAMP(MICROS, adjustedToUTC)
     * that reads as TimestampType directly, and TIMESTAMP(MICROS,
     * isAdjustedToUTC=false) that reads as TIMESTAMP_NTZ. Dispatch on
     * the read type so every vintage normalizes to TimestampType — the
@@ -38,7 +63,6 @@ object Tables {
   def events(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
     import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val df = load(s, d, "events")
     df.schema("ts").dataType match {
       case LongType =>
@@ -229,6 +253,71 @@ object Tables {
     }
 }
 
+/** Driver-side memo for BOUNDED values read back from immutable files:
+  * index-artifact HEADERS (the ≤nlist centroid table, the ≤K codebook,
+  * the 1-row corpus stats) and the parquet SCHEMA of every table
+  * [[Tables.load]] reads. Re-reading them is pure driver fixed cost at
+  * any scale: every
+  * `s.read.parquet(header).collect()` and every schema inference is 1-2
+  * scheduler round-trips (~50-100 ms) for ≤100 KB of content that
+  * NEVER changes while its files do not. The memo trades that for one
+  * driver listing of the watched path per read: the cached value is
+  * revalidated against the (relative path, length, mtime) signature of
+  * every data file under the path, so an overwritten header or table
+  * (a re-staged corpus version, a retrained artifact) re-reads instead
+  * of serving a stale value — the [[Tables.snapshot]] freshness
+  * discipline applied at file granularity. The cache key defaults to
+  * the watched path; a caller that derives several values from one
+  * path (a table's schema under different inference confs) passes its
+  * own key. NOT result caching: the cached object is metadata every
+  * consumer re-reads, never a query result, and validity is re-checked
+  * on every access. Bounded: the map clears itself past [[MaxEntries]]
+  * (per-call lifecycle dirs would otherwise accumulate ~100 KB cells
+  * across a long sweep). */
+object ArtifactHeaders {
+  private val MaxEntries = 128
+  private val cache =
+    new java.util.concurrent.ConcurrentHashMap[String, (String, AnyRef)]
+
+  /** (relpath:len:mtime;)* signature of the data files under `path`,
+    * recursively (a table may be a directory of partition dirs), or of
+    * `path` itself when it is a file. Names Spark's own listing skips
+    * (`_SUCCESS`, `_temporary/`, `.crc`) are skipped. Parquet files are
+    * never appended in place, so any rewrite changes the signature. */
+  private def signature(s: SparkSession, path: String): String = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
+    if (!fs.exists(p)) "absent"
+    else {
+      val root = fs.makeQualified(p).toString
+      val it = fs.listFiles(p, true)
+      val files = scala.collection.mutable.ArrayBuffer.empty[String]
+      while (it.hasNext) {
+        val f = it.next()
+        val rel = f.getPath.toString.stripPrefix(root)
+        if (!rel.split('/').exists(n => n.startsWith("_") || n.startsWith(".")))
+          files += s"$rel:${f.getLen}:${f.getModificationTime}"
+      }
+      files.sorted.mkString(";")
+    }
+  }
+
+  def cached[T <: AnyRef](s: SparkSession, path: String)(read: => T): T =
+    cached(s, path, path)(read)
+
+  def cached[T <: AnyRef](s: SparkSession, key: String, path: String)(read: => T): T = {
+    val sig = signature(s, path)
+    val hit = cache.get(key)
+    if (hit != null && hit._1 == sig) hit._2.asInstanceOf[T]
+    else {
+      val v = read
+      if (cache.size > MaxEntries) cache.clear()
+      cache.put(key, (sig, v))
+      v
+    }
+  }
+}
+
 /** Version-evicting, PER-KEY-LOCKED memo for bounded driver-side
   * artifacts (trained centroids/codebooks, BPE rules, robust stats) —
   * the one shared implementation of the at-most-one-live-version
@@ -239,58 +328,8 @@ object Tables {
   * one global monitor would serialize independent builds — the same
   * hazards the staged-artifact lock fixed. Same-key reentrancy stays
   * safe SAME-THREAD ONLY; the acquire is timed (the staged-artifact
-  * discipline, ADVICE r11 #3) so a cross-thread reentrant build fails
+  * discipline) so a cross-thread reentrant build fails
   * loudly naming the cell instead of hanging. */
-/** Driver-side memo for BOUNDED index-artifact HEADERS — the ≤nlist
-  * centroid table, the ≤K codebook, the 1-row corpus stats — that
-  * serving and nightly-append paths read back from immutable staged
-  * artifacts (r17, guide §1.2 fixed overhead / §5 driver): every
-  * `s.read.parquet(header).collect()` is 1-2 scheduler round-trips
-  * (~50-100 ms of pure fixed cost at any scale) for ≤100 KB of content
-  * that NEVER changes once the artifact is staged. The memo trades
-  * that for one driver `listStatus` of the header directory per read:
-  * the cached value is keyed by the header path and revalidated
-  * against the directory's (name, length, mtime) file signature, so an
-  * overwritten header (a re-staged corpus version, a retrained
-  * artifact) re-reads instead of serving stale floats — the
-  * [[Tables.snapshot]] freshness discipline applied at file
-  * granularity. NOT result caching: the cached object is an index
-  * artifact's bounded header (the same bytes every consumer re-reads),
-  * never a query result, and validity is re-checked on every access.
-  * Bounded: the map clears itself past [[MaxEntries]] (per-call
-  * lifecycle dirs would otherwise accumulate ~100 KB cells across a
-  * long sweep). */
-object ArtifactHeaders {
-  private val MaxEntries = 128
-  private val cache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, AnyRef)]
-
-  /** (name:len:mtime;)* signature of the header dir's data files —
-    * parquet part files are never appended in place, so any rewrite
-    * changes the signature. */
-  private def signature(s: SparkSession, path: String): String = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) "absent"
-    else fs.listStatus(p)
-      .filter(f => !f.getPath.getName.startsWith("_"))
-      .map(f => s"${f.getPath.getName}:${f.getLen}:${f.getModificationTime}")
-      .sorted.mkString(";")
-  }
-
-  def cached[T <: AnyRef](s: SparkSession, path: String)(read: => T): T = {
-    val sig = signature(s, path)
-    val hit = cache.get(path)
-    if (hit != null && hit._1 == sig) hit._2.asInstanceOf[T]
-    else {
-      val v = read
-      if (cache.size > MaxEntries) cache.clear()
-      cache.put(path, (sig, v))
-      v
-    }
-  }
-}
-
 final class VersionMemo[T] {
   private final class Cell {
     val lock = new java.util.concurrent.locks.ReentrantLock

@@ -510,7 +510,6 @@ object Streams {
     * the BATCH LSH oracle for the same query set — serving a query
     * stream and running the batch retrieval are the same answer. */
   def streamAnnServing(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     import graft.functions.Planes
     import graft.operators.Similarity.{LshTables, LshPlanesPerTable, K}
     val base = callDir("sann")
@@ -551,7 +550,6 @@ object Streams {
     * stream output is bit-equal to batch `sim_ivf_topk` — the gate
     * shares its oracle verbatim. */
   def streamIvfServing(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val base = callDir("sivf")
     graft.sources.Tables.embeddings(s, dir).filter(col("vec_id") < 10)
       .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
@@ -591,7 +589,6 @@ object Streams {
     * over two persisted artifacts, per-batch I/O = probed buckets +
     * probed lists + O(Q·depth) fusion. */
   def streamHybridServing(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val base = callDir("shyb")
     import s.implicits._
     val qdf = graft.operators.Similarity.HybridStreamDocs.toDF("query_doc")
@@ -694,7 +691,6 @@ object Streams {
     * per-batch small files. Float arrays survive the ndjson hop
     * bit-exactly (shortest-roundtrip rendering, as streamAnnServing). */
   def streamIndexAppend(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     // the IMMUTABLE snapshot stages once per corpus version; each call
     // appends into its own per-call DELTA and serves the union — the
     // production topology (last night's artifact + tonight's arrivals),
@@ -750,7 +746,6 @@ object Streams {
     * serving reads a consistent snapshot, and the compactor absorbs
     * the per-batch small files. */
   def streamPqIndexAppend(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     // snapshot-once + per-call delta, as streamIndexAppend
     val snap = graft.operators.Similarity.stagedIvfPqIncSnapshot(s, dir)
     val delta = callDir("spqidx")

@@ -7,7 +7,7 @@ object BenchOne {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val runs = if (args.length > 2) args(2).toInt else 3
-    val spark = graft.GraftSession.local(32)
+    val spark = graft.GraftSession.local(Runtime.getRuntime.availableProcessors)
     spark.range(1000).selectExpr("sum(id)").collect()
     val fn = graft.SparkEntry.benchOverrides
       .getOrElse(name, graft.SparkEntry.queries(name))

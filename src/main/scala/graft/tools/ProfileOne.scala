@@ -14,7 +14,7 @@ object ProfileOne {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val runs = if (args.length > 2) args(2).toInt else 2
-    val spark = graft.GraftSession.local(32)
+    val spark = graft.GraftSession.local(Runtime.getRuntime.availableProcessors)
     spark.range(1000).selectExpr("sum(id)").collect()
     val t0 = new java.util.concurrent.atomic.AtomicLong(System.nanoTime())
     val lastEnd = new java.util.concurrent.atomic.AtomicLong(System.nanoTime())

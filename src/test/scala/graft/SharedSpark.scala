@@ -17,6 +17,42 @@ object SharedSpark {
   }
   val sf: String = "/root/testdata/sf0.001"
 
+  /** Count the Spark JOBS `body` launches on this thread, RDD jobs
+    * included: a job with no QueryExecution (parquet schema inference's
+    * `parallelize → collect`) is invisible to [[countExecutions]].
+    * `body` runs in a unique job group and the listener counts only
+    * that group's jobs. A marker job in a second unique group closes
+    * the window: the listener bus delivers in order, so once the
+    * marker's start arrives every job of `body` has been delivered. */
+  def countJobs[T](s: SparkSession)(body: => T): (T, Int) = {
+    val sc = s.sparkContext
+    val nonce = java.util.UUID.randomUUID.toString.replace("-", "")
+    val group = s"graft_jobs_$nonce"
+    val endGroup = s"graft_jobs_end_$nonce"
+    val count = new java.util.concurrent.atomic.AtomicInteger
+    @volatile var closed = false
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(js.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`) => count.incrementAndGet(); ()
+          case Some(`endGroup`) => closed = true
+          case _ => ()
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "countJobs")
+      val r = try body finally sc.clearJobGroup()
+      sc.setJobGroup(endGroup, "countJobs end marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      var waited = 0
+      while (!closed && waited < 30000) { Thread.sleep(25); waited += 25 }
+      assert(closed, "listener bus never delivered the end marker job")
+      (r, count.get())
+    } finally sc.removeSparkListener(listener)
+  }
+
   /** Count successful query executions whose executed-plan string
     * satisfies `pred` while `body` runs — windowed by uniquely-tagged
     * marker queries so the ASYNC execution-listener bus cannot leak

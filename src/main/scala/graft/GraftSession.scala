@@ -45,6 +45,11 @@ object GraftSession {
       // Tables.events normalizes; set for the session's whole life, so
       // no read flips how later reads see nanosecond timestamps
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      // `file:` through java.nio instead of a forked chmod / ls /
+      // readlink per local file written, listed or renamed; the
+      // FileContext one carries streaming checkpoints and state stores
+      .config("spark.hadoop.fs.file.impl", classOf[graft.sources.NioLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[graft.sources.NioLocalFs].getName)
     master.map(b.master).getOrElse(b)
   }
 

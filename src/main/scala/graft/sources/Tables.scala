@@ -87,57 +87,22 @@ object Tables {
   def embeddingsParallel(s: SparkSession, d: String): DataFrame =
     embeddings(s, d).repartition(s.sparkContext.defaultParallelism)
 
-  /** Corpus snapshot VERSION for one table: a fingerprint of the
-    * table's file listing (name, length, mtime). Session-lifetime
-    * staged artifacts — pair lineage, kNN graphs, persisted IVF/IVFPQ
+  /** Corpus snapshot VERSION for one table: the MD5 of the table's
+    * [[ArtifactHeaders.signature]], the sorted (relative path, length,
+    * mtime) listing of its data files. Session-lifetime staged
+    * artifacts — pair lineage, kNN graphs, persisted IVF/IVFPQ
     * indexes, trained centroid/codebook/stats sets — key on
     * [[versionedKey]] instead of the bare dir, so a corpus RE-STAGED
     * under the same path within one session triggers a rebuild instead
-    * of silently serving a stale artifact (VERDICT r8 #4). Cost: one
-    * driver-side listing per staged-artifact access — the same list
-    * call any snapshot-aware object-store reader pays; at 100 TB a
-    * production deployment would swap this for the catalog's snapshot
-    * id (Iceberg/Delta version) through the identical key. */
-  def snapshot(s: SparkSession, dir: String, table: String): String = {
-    val path = new org.apache.hadoop.fs.Path(s"$dir/$table.parquet")
-    val fs = path.getFileSystem(s.sparkContext.hadoopConfiguration)
-    // per-file digests COMBINE COMMUTATIVELY (XOR of the 128-bit MD5):
-    // FS listing order is not guaranteed stable, and a spurious "new
-    // version" would retrain a staged artifact for nothing. XOR of a
-    // cryptographic digest — not an additive 31-polynomial (ADVICE r9
-    // #3): the weak sum let distinct listings cancel (e.g. attribute
-    // swaps between two files), silently serving a stale artifact.
-    def tagDigest(tag: String): Array[Byte] =
-      java.security.MessageDigest.getInstance("MD5")
-        .digest(tag.getBytes("UTF-8"))
-    val h = new Array[Byte](16)
-    def mix(tag: String): Unit = {
-      val d = tagDigest(tag)
-      var i = 0
-      while (i < 16) { h(i) = (h(i) ^ d(i)).toByte; i += 1 }
-    }
-    var any = false
-    if (fs.exists(path)) {
-      // the digested tag carries the path RELATIVE TO THE TABLE ROOT,
-      // not the bare file name (ADVICE r10 #2): with name-only tags,
-      // two files in different partition subdirs sharing (name, len,
-      // mtime) produced identical digests that CANCEL pairwise under
-      // XOR — adding or removing such a pair left the fingerprint
-      // unchanged and served a stale staged artifact. Relative paths
-      // make every tag unique within a listing, so cancellation is
-      // impossible.
-      val root = fs.makeQualified(path).toString
-      val it = fs.listFiles(path, true)
-      while (it.hasNext) {
-        val f = it.next()
-        val rel = f.getPath.toString.stripPrefix(root)
-        mix(s"$rel:${f.getLen}:${f.getModificationTime}")
-        any = true
-      }
-    }
-    if (!any) mix("absent")
-    h.map(b => f"${b & 0xff}%02x").mkString
-  }
+    * of silently serving a stale artifact. Sorting makes it independent
+    * of listing order, and relative paths tell same-named files in
+    * different partition dirs apart. Cost: one driver-side listing per
+    * staged-artifact access — the same list call any snapshot-aware
+    * object-store reader pays; at 100 TB a production deployment would
+    * swap this for the catalog's snapshot id (Iceberg/Delta version)
+    * through the identical key. */
+  def snapshot(s: SparkSession, dir: String, table: String): String =
+    stagedDirKey(ArtifactHeaders.signature(s, s"$dir/$table.parquet"))
 
   /** Staged-cache key carrying the corpus content version. */
   def versionedKey(s: SparkSession, dir: String, table: String): String =
@@ -265,11 +230,10 @@ object Tables {
   * revalidated against the (relative path, length, mtime) signature of
   * every data file under the path, so an overwritten header or table
   * (a re-staged corpus version, a retrained artifact) re-reads instead
-  * of serving a stale value — the [[Tables.snapshot]] freshness
-  * discipline applied at file granularity. The cache key defaults to
-  * the watched path; a caller that derives several values from one
-  * path (a table's schema under different inference confs) passes its
-  * own key. NOT result caching: the cached object is metadata every
+  * of serving a stale value; [[Tables.snapshot]] is the digest of the
+  * same signature. The cache key defaults to the watched path; a
+  * caller that derives several values from one path (a table's schema
+  * under different inference confs) passes its own key. NOT result caching: the cached object is metadata every
   * consumer re-reads, never a query result, and validity is re-checked
   * on every access. Bounded: the map clears itself past [[MaxEntries]]
   * (per-call lifecycle dirs would otherwise accumulate ~100 KB cells
@@ -281,10 +245,11 @@ object ArtifactHeaders {
 
   /** (relpath:len:mtime;)* signature of the data files under `path`,
     * recursively (a table may be a directory of partition dirs), or of
-    * `path` itself when it is a file. Names Spark's own listing skips
-    * (`_SUCCESS`, `_temporary/`, `.crc`) are skipped. Parquet files are
+    * `path` itself when it is a file. A path segment Spark's own
+    * listing skips is skipped: `_SUCCESS`, `_temporary/`, `.crc`,
+    * `._COPYING_` — but not a `_k=v` partition dir. Parquet files are
     * never appended in place, so any rewrite changes the signature. */
-  private def signature(s: SparkSession, path: String): String = {
+  private[sources] def signature(s: SparkSession, path: String): String = {
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) "absent"
@@ -295,12 +260,18 @@ object ArtifactHeaders {
       while (it.hasNext) {
         val f = it.next()
         val rel = f.getPath.toString.stripPrefix(root)
-        if (!rel.split('/').exists(n => n.startsWith("_") || n.startsWith(".")))
+        if (!rel.split('/').exists(skippedName))
           files += s"$rel:${f.getLen}:${f.getModificationTime}"
       }
       files.sorted.mkString(";")
     }
   }
+
+  /** Spark's `HadoopFSUtils.shouldFilterOutPathName`, which is private
+    * to Spark. */
+  private def skippedName(n: String): Boolean =
+    ((n.startsWith("_") && !n.contains("=")) || n.startsWith(".") || n.endsWith("._COPYING_")) &&
+      !(n.startsWith("_common_metadata") || n.startsWith("_metadata"))
 
   def cached[T <: AnyRef](s: SparkSession, path: String)(read: => T): T =
     cached(s, path, path)(read)

@@ -77,9 +77,6 @@ object Streams {
     if (tsFromUs) in.withColumn("ts", timestamp_micros(col("ts_us"))) else in
   }
 
-  /** Stages a slice as ONE named json file with a controlled mtime —
-    * the multi-file gates (late data, checkpoint resume) order their
-    * micro-batches by source-file modification time. */
   /** Fresh per-call artifact dir, registered with the boundary janitor
     * (graft.TmpDirs) so a bench sweep cannot accumulate one copy per
     * rep (ADVICE r9 #4). */
@@ -89,6 +86,9 @@ object Streams {
     p
   }
 
+  /** Stages a slice as ONE named json file with a controlled mtime —
+    * the multi-file gates (late data, checkpoint resume) order their
+    * micro-batches by source-file modification time. */
   private def stageNamedFile(df: DataFrame, tmpDir: String, dest: String,
       mtime: Long): Unit = {
     df.coalesce(1).write.json(tmpDir)

@@ -73,4 +73,24 @@ class SchemaMemoSpec extends AnyFunSuite {
     }
     assert(Tables.load(spark, dir, "t").schema("name").dataType == BinaryType)
   }
+
+  test("ArtifactHeaders revalidates files under `_k=v` partition dirs, not `._COPYING_` ones") {
+    // Spark's listing keeps a `_`-name holding `=` as a partition dir;
+    // graft itself writes `__graft_valid=…` dirs
+    val path = s"${freshDir("underscore")}/t.parquet"
+    def write(n: Int): Unit = spark.range(n).withColumn("_p", lit(1))
+      .write.mode("overwrite").partitionBy("_p").parquet(path)
+    val reads = new java.util.concurrent.atomic.AtomicInteger
+    def read(): Integer =
+      graft.sources.ArtifactHeaders.cached(spark, path)(Integer.valueOf(reads.incrementAndGet()))
+    write(10)
+    assert(read() == 1 && read() == 1, "an unchanged path must be served from the memo")
+    val v1 = Tables.snapshot(spark, new java.io.File(path).getParent, "t")
+    write(20)
+    assert(read() == 2, "a rewritten file under _p=1/ must re-read, not serve the stale memo")
+    assert(Tables.snapshot(spark, new java.io.File(path).getParent, "t") != v1)
+    java.nio.file.Files.write(java.nio.file.Paths.get(path, "_p=1", "part-x.parquet._COPYING_"),
+      Array[Byte](1, 2, 3))
+    assert(read() == 2, "a file still being copied in is not part of the signature")
+  }
 }

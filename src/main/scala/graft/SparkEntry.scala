@@ -197,26 +197,26 @@ object SparkEntry {
     "sim_multiprobe_topk" -> (Similarity.multiprobeTopK _),
     "sim_rerank_topk" -> (Similarity.rerankTopK _),
     "sim_matryoshka_topk" -> (Similarity.matryoshkaTopK _),
-    "sim_ivf_topk" -> (Similarity.ivfTopK _),
-    "sim_ivf_index_topk" -> (Similarity.ivfTopKIndexed _),
-    "sim_ivf_index_incremental" -> (Similarity.ivfIncTopK _),
-    "sim_ivf_index_drift" -> (Similarity.ivfIncDriftReport _),
-    "sim_ivf_pq_index_incremental" -> (Similarity.ivfPqIncTopK _),
-    "sim_ivf_pq_lifecycle_topk" -> (Similarity.ivfPqLifecycleTopK _),
-    "sim_ivf_pq_index_drift" -> (Similarity.ivfPqIncDriftReport _),
-    "sim_ivf_index_compact" -> (Similarity.ivfCompactTopK _),
-    "sim_ivf_lifecycle_topk" -> (Similarity.ivfLifecycleTopK _),
-    "sim_ivf_index_imbalance" -> (Similarity.ivfIncImbalanceReport _),
-    "sim_ivf_pq_index_imbalance" -> (Similarity.ivfPqIncImbalanceReport _),
+    "sim_ivf_topk" -> (Similarity.topK(Similarity.Ivf) _),
+    "sim_ivf_index_topk" -> (Similarity.indexTopK(Similarity.Ivf) _),
+    "sim_ivf_index_incremental" -> (Similarity.incTopK(Similarity.Ivf) _),
+    "sim_ivf_index_drift" -> (Similarity.driftReport(Similarity.Ivf) _),
+    "sim_ivf_pq_index_incremental" -> (Similarity.incTopK(Similarity.IvfPq) _),
+    "sim_ivf_pq_lifecycle_topk" -> (Similarity.lifecycleTopK(Similarity.IvfPq) _),
+    "sim_ivf_pq_index_drift" -> (Similarity.driftReport(Similarity.IvfPq) _),
+    "sim_ivf_index_compact" -> (Similarity.compactTopK(Similarity.Ivf) _),
+    "sim_ivf_lifecycle_topk" -> (Similarity.lifecycleTopK(Similarity.Ivf) _),
+    "sim_ivf_index_imbalance" -> (Similarity.imbalanceReport(Similarity.Ivf) _),
+    "sim_ivf_pq_index_imbalance" -> (Similarity.imbalanceReport(Similarity.IvfPq) _),
     "sim_maintenance_plan" -> (Similarity.maintenancePlan _),
     "sim_maintenance_apply" -> (Similarity.maintenanceApply _),
-    "sim_maintenance_nightly" -> (Similarity.ivfTwoNightTopK _),
-    "sim_pq_maintenance_nightly" -> (Similarity.ivfPqTwoNightTopK _),
+    "sim_maintenance_nightly" -> (Similarity.twoNightTopK(Similarity.Ivf) _),
+    "sim_pq_maintenance_nightly" -> (Similarity.twoNightTopK(Similarity.IvfPq) _),
     "text_bm25_maintenance_nightly" -> (TextAnalysis.bm25TwoNightTopK _),
-    "sim_ivf_lifecycle_retrain" -> (Similarity.ivfRetrainTopK _),
-    "sim_ivf_pq_lifecycle_retrain" -> (Similarity.ivfPqRetrainTopK _),
-    "sim_ivf_pq_index_compact" -> (Similarity.ivfPqCompactTopK _),
-    "stream_index_append" -> (graft.streaming.Streams.streamIndexAppend _),
+    "sim_ivf_lifecycle_retrain" -> (Similarity.retrainTopK(Similarity.Ivf) _),
+    "sim_ivf_pq_lifecycle_retrain" -> (Similarity.retrainTopK(Similarity.IvfPq) _),
+    "sim_ivf_pq_index_compact" -> (Similarity.compactTopK(Similarity.IvfPq) _),
+    "stream_index_append" -> (graft.streaming.Streams.streamIndexAppend(Similarity.Ivf) _),
     "text_bm25_topk" -> (TextAnalysis.bm25TopK _),
     "text_bm25_index_topk" -> (TextAnalysis.bm25IndexTopK _),
     "text_bm25_index_incremental" -> (TextAnalysis.bm25IndexIncTopK _),
@@ -232,8 +232,8 @@ object SparkEntry {
     "sim_hybrid_index_batch_topk" -> (Similarity.hybridIndexBatchTopK _),
     "stream_hybrid_serving" -> (graft.streaming.Streams.streamHybridServing _),
     "sim_pq_topk" -> (Similarity.pqTopK _),
-    "sim_ivf_pq_topk" -> (Similarity.ivfPqTopK _),
-    "sim_ivf_pq_index_topk" -> (Similarity.ivfPqTopKIndexed _),
+    "sim_ivf_pq_topk" -> (Similarity.topK(Similarity.IvfPq) _),
+    "sim_ivf_pq_index_topk" -> (Similarity.indexTopK(Similarity.IvfPq) _),
     "sim_quantize" -> (Similarity.quantize _),
     "sim_knn_graph" -> (Similarity.knnGraph _),
     "sim_knn_graph_lineage" -> (Similarity.knnGraphLineage _),
@@ -290,7 +290,7 @@ object SparkEntry {
     "text_chunk" -> (TextAnalysis.chunk _),
     "text_split" -> (TextAnalysis.trainValSplit _),
     "text_stratified_split" -> (TextAnalysis.stratifiedSplit _),
-    "stream_pq_index_append" -> (graft.streaming.Streams.streamPqIndexAppend _),
+    "stream_pq_index_append" -> (graft.streaming.Streams.streamIndexAppend(Similarity.IvfPq) _),
     "text_split_leakage_free" -> (TextAnalysis.leakageFreeSplit _),
     "text_split_leakage_lineage" -> (TextAnalysis.leakageFreeSplitLineage _),
     "text_pack" -> (TextAnalysis.pack _),
@@ -1602,7 +1602,7 @@ object SparkEntry {
 
   /** The small-files consults' oracle side: the FS file count itself
     * cannot be recomputed from the tables, but the layout CONTRACT can
-    * — a full write leaves exactly one file per list (writeIvfIndex /
+    * — a full write leaves exactly one file per list (Similarity.writeIndex /
     * buildBm25Index repartition on the list key) and each append only
     * adds files, so for a maintained main `fired ⟺ tonight's batch is
     * non-empty`, and for a freshly compacted or fully rewritten

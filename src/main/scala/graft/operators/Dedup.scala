@@ -511,7 +511,7 @@ object Dedup {
     // re-banding the whole rep signature index per call. Derived from
     // the just-written rep_sigs so the two artifacts cannot drift.
     bandedSigs(s.read.parquet(s"$base/rep_sigs"), "o_id")
-      // explicit width (r17 — see Similarity.writeIvfIndex):
+      // explicit width (see Similarity.writeIndex):
       // repartition(col) is AQE-coalescible and a coalesced write
       // opens all LshBands parquet writers serially in one task
       .repartition(LshBands, col("band"))

@@ -334,7 +334,7 @@ object Etl {
     val base = s"${System.getProperty("java.io.tmpdir")}/graft_retain_${ProcessHandle.current().pid()}"
     Tables.events(s, dir)
       .withColumn("dt", date_format(col("ts"), "yyyy-MM-dd"))
-      // explicit width (r17 — see Similarity.writeIvfIndex): exempt
+      // explicit width (see Similarity.writeIndex): exempt
       // from AQE coalescing; each dt still lands whole in one task, so
       // the one-file-per-day layout is unchanged
       .repartition(s.sparkContext.defaultParallelism, col("dt"))

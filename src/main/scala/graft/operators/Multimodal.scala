@@ -495,7 +495,7 @@ object Multimodal {
     snap.write.mode("overwrite").parquet(s"$base/snap_hashes")
     s.read.parquet(s"$base/snap_hashes")
       .select(col("doc_id"), posexplode(col("bands")).as(Seq("band", "band_val")))
-      // explicit width (r17 — see Similarity.writeIvfIndex): exempt
+      // explicit width (see Similarity.writeIndex): exempt
       // from AQE coalescing, one task per band, one file per band dir
       .repartition(PhashBands, col("band"))
       .sortWithinPartitions(col("band_val"))

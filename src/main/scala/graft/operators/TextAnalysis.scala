@@ -1233,7 +1233,7 @@ object TextAnalysis {
     tfs.groupBy(col("doc_id")).agg(first(col("len")).as("len"))
       .agg(count(lit(1)).as("n_docs"), sum(col("len")).as("total_len"))
       .coalesce(1).write.mode("overwrite").parquet(s"$base/stats")
-    // explicit repartition widths (r17 — see Similarity.writeIvfIndex):
+    // explicit repartition widths (see Similarity.writeIndex):
     // repartition(col) is AQE-coalescible and a coalesced write opens
     // all ≤Bm25Buckets parquet writers serially in one task; the fixed
     // width is exempt and keeps one file per bucket (each bucket whole
@@ -1266,7 +1266,7 @@ object TextAnalysis {
 
   /** BM25 scores for a BOUNDED query-term frame, served entirely from
     * the persisted index. The query is KNOWN at query time, so the
-    * serving plan resolves it driver-side (the readCentroids
+    * serving plan resolves it driver-side (the Similarity.readHeader
     * discipline — every collect here is ≤ `cap` or 1 row by contract):
     *  - the query terms + their buckets collect (≤ cap rows);
     *  - their df rows collect from the dfs artifact through a STATIC
@@ -1480,7 +1480,7 @@ object TextAnalysis {
   }
 
   /** COMPOSITE lexical-index lifecycle over ONE staged index — the
-    * [[graft.operators.Similarity.ivfLifecycleTopK]] story for the
+    * [[graft.operators.Similarity.lifecycleTopK]] story for the
     * BM25 postings: snapshot build (frozen stats — the only corpus
     * tokenize) → tonight's docs as a real two-micro-batch STREAM of
     * idempotent bucket appends → the drift report consults the
@@ -1506,8 +1506,8 @@ object TextAnalysis {
     bm25TopKFrom(s, stagedBm25LifecycleIndex(s, dir))
 
   /** Re-stat the maintained lexical index IN PLACE — the lexical
-    * RETRAIN (VERDICT r10 #5: the drift report detects df staleness;
-    * this executes the re-stat): ONE pass over the POSTINGS artifact
+    * RETRAIN (the drift report detects df staleness; this executes
+    * the re-stat): ONE pass over the POSTINGS artifact
     * (rows of (term, doc_id, tf, len, bucket) — the text is never
     * re-tokenized) recomputes df per term and the (n_docs, total_len)
     * stats and replaces the frozen artifacts; postings files are
@@ -1519,48 +1519,18 @@ object TextAnalysis {
     // stage-then-publish, the compactIvfIncIndex discipline: a direct
     // overwrite deletes the live artifact before the new one lands, so
     // a crash mid-write would serve a HALF-WRITTEN stats/dfs silently.
-    // Both stages write first (live artifacts untouched); each then
-    // swaps in by RENAMING THE LIVE DIR ASIDE and renaming the stage
-    // in (ADVICE r11 #4: a delete-then-rename swap left no live
-    // artifact for the O(files) duration of the recursive delete — an
-    // avoidable serving outage; two renames are O(1) each, and a
-    // COMPLETE copy of the artifact — retired, stage, or live — is on
-    // disk at every instant). Per-artifact no state is ever
-    // half-written (a stage publishes only when whole — _SUCCESS); a
-    // crash between the two swaps leaves fresh stats + stale dfs,
-    // which the next idempotent run repairs (everything derives from
-    // the postings alone). Recovery on entry finishes a crashed swap
-    // or restores the retired copy if the crash hit between the two
-    // publish renames.
+    // Both stages write first (live artifacts untouched), then each
+    // swaps in through DirSwap (retire → publish → drop, so a complete
+    // copy is on disk at every instant). A stage publishes only when
+    // whole (_SUCCESS); a crash between the two swaps leaves fresh
+    // stats + stale dfs, which the next idempotent run repairs
+    // (everything derives from the postings alone). Recovery on entry
+    // finishes a crashed swap or restores the retired copy.
     val fs = new org.apache.hadoop.fs.Path(base)
       .getFileSystem(s.sparkContext.hadoopConfiguration)
     def p(tail: String) = new org.apache.hadoop.fs.Path(s"$base/$tail")
-    def publish(stage: String, live: String): Unit = {
-      val sp = p(stage); val lp = p(live); val op = p(s"${live}_retired")
-      fs.delete(op, true) // clear any prior retired copy (idempotent)
-      // Hadoop rename reports failure by RETURNING false — swallowing
-      // it here would memoize an artifact whose live dir was just
-      // retired (the TransferMeta commit convention: throw loudly)
-      if (fs.exists(lp))
-        require(fs.rename(lp, op), s"could not retire $lp -> $op")
-      require(fs.rename(sp, lp), s"could not publish $sp -> $lp")
-      fs.delete(op, true)
-    }
-    def recover(stage: String, live: String): Unit = {
-      val sp = p(stage); val lp = p(live); val op = p(s"${live}_retired")
-      if (fs.exists(sp) &&
-          fs.exists(new org.apache.hadoop.fs.Path(sp, "_SUCCESS")))
-        publish(stage, live) // complete stage: finish the crashed swap
-      else {
-        if (fs.exists(sp)) fs.delete(sp, true) // stage write crashed: discard
-        // crash between the two publish renames: the retired copy is
-        // the only complete artifact — restore it
-        if (!fs.exists(lp) && fs.exists(op))
-          require(fs.rename(op, lp), s"could not restore $op -> $lp")
-      }
-    }
-    recover("stats_restat_stage", "stats")
-    recover("dfs_restat_stage", "dfs")
+    graft.sources.DirSwap.recover(fs, p("stats_restat_stage"), p("stats"))
+    graft.sources.DirSwap.recover(fs, p("dfs_restat_stage"), p("dfs"))
     val posts = s.read.schema(Bm25PostingsSchema).parquet(s"$base/postings")
     posts.groupBy(col("doc_id")).agg(first(col("len")).as("len"))
       .agg(count(lit(1)).as("n_docs"), sum(col("len")).as("total_len"))
@@ -1568,13 +1538,12 @@ object TextAnalysis {
       .parquet(s"$base/stats_restat_stage")
     posts.groupBy(col("term")).agg(count(lit(1)).as("df"))
       .withColumn("bucket", termBucket(col("term")))
-      // explicit width (r17): exempt from AQE coalescing — see
-      // buildBm25Index
+      // explicit width: exempt from AQE coalescing — see buildBm25Index
       .repartition(Bm25Buckets, col("bucket"))
       .write.mode("overwrite").partitionBy("bucket")
       .parquet(s"$base/dfs_restat_stage")
-    publish("stats_restat_stage", "stats")
-    publish("dfs_restat_stage", "dfs")
+    graft.sources.DirSwap.publish(fs, p("stats_restat_stage"), p("stats"))
+    graft.sources.DirSwap.publish(fs, p("dfs_restat_stage"), p("dfs"))
   }
 
   /** Gate: the RE-STAT branch of the lexical lifecycle, end-to-end —

@@ -420,19 +420,18 @@ object Pipeline {
     }
   }
 
-  /** Quarantine routing in ONE source scan (VERDICT r6 #3 / r5 #5):
-    * the old shape ran `filter(!valid)` as a second full pass over the
-    * source — at 100 TB that doubles the scan cost whenever the
-    * validity predicate isn't selective. Instead the frame is written
-    * ONCE, partitioned by the validity bit (ahead of any user route
-    * keys), into a staging directory next to the target; the two
-    * validity subtrees are then FS-renamed to the target and quarantine
-    * paths — driver-side metadata moves, no second data pass. Both
-    * counters ride the same write via observe(). Route-key partition
-    * dirs nest inside each validity branch, so the promoted target tree
-    * is byte-identical to the direct partitionBy write; quarantined
-    * rows gain the same route layout (previously they were written
-    * unpartitioned — same rows, now mirror-partitioned).
+  /** Quarantine routing in ONE source scan: a `filter(!valid)` second
+    * pass over the source would double the scan cost at 100 TB
+    * whenever the validity predicate isn't selective. Instead the
+    * frame is written ONCE, partitioned by the validity bit (ahead of
+    * any user route keys), into a staging directory next to the
+    * target; the two validity subtrees are then FS-renamed to the
+    * target and quarantine paths — driver-side metadata moves, no
+    * second data pass. Both counters ride the same write via
+    * observe(). Route-key partition dirs nest inside each validity
+    * branch, so the promoted target tree is byte-identical to the
+    * direct partitionBy write; quarantined rows get the same route
+    * layout.
     * Budget enforcement keeps the historical contract: both sinks are
     * fully promoted before ErrorBudgetExceeded is thrown (transfers are
     * overwrite-idempotent, the retry wrapper converges). */
@@ -440,8 +439,14 @@ object Pipeline {
       targetPath: String, validExprSql: String, qPath: String,
       df: DataFrame): (Long, Long) = {
     import org.apache.hadoop.fs.Path
+    import graft.sources.DirSwap
     val valid = coalesce(expr(validExprSql), lit(false))
     val staging = s"$targetPath.__graft_staging"
+    val fs = new Path(staging).getFileSystem(s.sparkContext.hadoopConfiguration)
+    // a promote a crash interrupted: put back a retired sink and drop
+    // the stale branch (the staging write below replaces it anyway)
+    DirSwap.recover(fs, new Path(staging, "__graft_valid=true"), new Path(targetPath))
+    DirSwap.recover(fs, new Path(staging, "__graft_valid=false"), new Path(qPath))
     val obs = org.apache.spark.sql.Observation()
     val observed = df.withColumn("__graft_valid", valid)
       .observe(obs, count(lit(1)).as("n_rows"),
@@ -451,14 +456,15 @@ object Pipeline {
       .parquet(staging)
     val errs = obs.get("n_errors").asInstanceOf[Long]
     val totalRows = obs.get("n_rows").asInstanceOf[Long]
-    val fs = new Path(staging).getFileSystem(s.sparkContext.hadoopConfiguration)
+    // the sinks swap in through DirSwap (retire → publish → drop): a
+    // reader or a crash between two steps sees the old tree or the new
+    // one, never no target
     def promote(branch: String, dest: String): Unit = {
       val src = new Path(staging, branch)
       val d = new Path(dest)
-      fs.delete(d, true)
       if (fs.exists(src)) {
         fs.mkdirs(d.getParent)
-        fs.rename(src, d)
+        DirSwap.publish(fs, src, d)
       } else {
         // empty branch: keep the sink readable (schema'd empty parquet,
         // the historical contract). limit(0) optimizes to an empty

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
 import java.sql.Timestamp
+import graft.operators.Similarity
+import graft.operators.Similarity.IvfFamily
 
 /** Structured Streaming transfers — the streaming form of the
   * reference's scheduled Transfer loop (reference: config.go:20-21
@@ -556,7 +558,8 @@ object Streams {
       .coalesce(1).write.json(s"$base/src")
     val in = s.readStream.schema("query_id LONG, q_emb ARRAY<FLOAT>").json(s"$base/src")
     val q = in.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
-      graft.operators.Similarity.ivfIndexedServe(s, dir, batch)
+      Similarity.serveIndex(Similarity.Ivf)(s, dir,
+          Similarity.stagedIndex(Similarity.Ivf)(s, dir), Some(batch))
         .write.mode("append").parquet(s"$base/dst")
       ()
     }.option("checkpointLocation", s"$base/cp")
@@ -633,8 +636,7 @@ object Streams {
   }
 
   /** Gate query: STREAMING maintenance of the LEXICAL index — the
-    * [[streamIndexAppend]] topology for the BM25 postings (VERDICT r9
-    * #1's lifecycle completed on the text side): the frozen-stats
+    * [[streamIndexAppend]] topology for the BM25 postings: the frozen-stats
     * snapshot stages once per corpus version; tonight's documents land
     * in two real micro-batches, each tokenizing ONLY its batch and
     * appending its postings rows idempotently into a per-call delta's
@@ -676,43 +678,45 @@ object Streams {
   }
 
   /** Gate query: STREAMING index maintenance — the nightly append as a
-    * vector stream: the snapshot index (frozen quantizer + snapshot
-    * postings) stages once; tonight's arrivals land in TWO real
-    * micro-batches (maxFilesPerTrigger=1 over two staged slices), each
-    * assigning against the frozen artifact centroids and APPENDING its
-    * postings files — exactly-once via the checkpoint. Assignment is
-    * stateless and appends are additive, so micro-batch boundaries
-    * cannot change the final postings SET: serving after the drain is
-    * bit-equal to the batch `sim_ivf_index_incremental` gate and
-    * shares its oracle verbatim. At 100 TB this is the index's
-    * ingestion topology: a continuous crawl feeds list partitions
-    * while serving reads a consistent snapshot of them; the compactor
-    * ([[graft.operators.Similarity.compactIvfIncIndex]]) absorbs the
-    * per-batch small files. Float arrays survive the ndjson hop
-    * bit-exactly (shortest-roundtrip rendering, as streamAnnServing). */
-  def streamIndexAppend(s: SparkSession, dir: String): DataFrame = {
-    // the IMMUTABLE snapshot stages once per corpus version; each call
-    // appends into its own per-call DELTA and serves the union — the
-    // production topology (last night's artifact + tonight's arrivals),
-    // and a bench rep pays only the marginal append, not a rebuild
-    val snap = graft.operators.Similarity.stagedIvfIncSnapshot(s, dir)
-    val delta = callDir("sidx")
-    runIndexAppendStream(s, dir, delta, snap)
-    graft.operators.Similarity.ivfServeUnion(s, dir, snap, delta)
+    * vector stream, for either index family: the snapshot index (frozen
+    * quantizer [+ codebook] and snapshot postings) stages once per
+    * corpus version; tonight's arrivals land in TWO real micro-batches
+    * (maxFilesPerTrigger=1 over two staged slices), each assigning
+    * [and encoding] against the frozen artifact headers and appending
+    * its postings files into a per-call DELTA — exactly-once via the
+    * checkpoint. Assignment is stateless and appends are additive, so
+    * micro-batch boundaries cannot change the final postings SET:
+    * serving snapshot ∪ delta after the drain is bit-equal to the
+    * family's batch incremental gate and shares its oracle verbatim.
+    * This is the production topology — last night's immutable artifact
+    * plus tonight's arrivals, a continuous crawl feeding list
+    * partitions while serving reads a consistent snapshot of them; the
+    * compactor ([[graft.operators.Similarity.compactIvfIncIndex]])
+    * absorbs the per-batch small files, and a bench rep pays only the
+    * marginal append, not a rebuild. Float arrays survive the ndjson
+    * hop bit-exactly (shortest-roundtrip rendering, as
+    * streamAnnServing). */
+  def streamIndexAppend(f: IvfFamily)(
+      s: SparkSession, dir: String): DataFrame = {
+    val snap = Similarity.stagedSnapshot(f)(s, dir)
+    val delta = callDir(s"s${f.name}idx")
+    runIndexAppendStream(f)(s, dir, delta, snap)
+    Similarity.serveIndex(f)(s, dir, snap, deltaBase = Some(delta))
   }
 
   /** The nightly-batch append STREAM against an existing snapshot
-    * index at `base` — two real micro-batches (maxFilesPerTrigger=1
-    * over two staged slices), each assigning against the frozen
-    * artifact centroids and publishing idempotently (bid-keyed: a
-    * replayed micro-batch purges its own files first, so the append is
-    * exactly-once in effect). Extracted so the composite lifecycle
-    * gate drives the SAME topology the streaming gate drains. */
-  private[graft] def runIndexAppendStream(s: SparkSession, dir: String,
-      base: String, artifactBase: String = null): Unit = {
+    * index at `base` — two real micro-batches, each publishing
+    * idempotently under the frozen headers of `artifactBase` (default:
+    * `base`; bid-keyed: a replayed micro-batch purges its own files
+    * first, so the append is exactly-once in effect). Shared by the
+    * streaming gate and the composite lifecycle gate, so both drive the
+    * SAME topology. */
+  private[graft] def runIndexAppendStream(f: IvfFamily)(
+      s: SparkSession, dir: String, base: String,
+      artifactBase: String = null): Unit = {
     val art = Option(artifactBase).getOrElse(base)
     val batch = graft.sources.Tables.embeddings(s, dir)
-      .filter(expr(graft.operators.Similarity.IvfIncBatchPred))
+      .filter(expr(Similarity.IvfIncBatchPred))
       .select(col("vec_id").as("cand_id"), col("embedding").as("c_emb"))
     new java.io.File(s"$base/src").mkdirs()
     val t0 = System.currentTimeMillis()
@@ -723,55 +727,7 @@ object Streams {
     val in = s.readStream.schema("cand_id LONG, c_emb ARRAY<FLOAT>")
       .option("maxFilesPerTrigger", 1).json(s"$base/src")
     val q = in.writeStream.foreachBatch { (mb: DataFrame, bid: Long) =>
-      graft.operators.Similarity.appendIvfIncVectorsIdempotent(s, base, mb, bid, art)
-      ()
-    }.option("checkpointLocation", s"$base/cp")
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-  }
-
-  /** Gate query: STREAMING maintenance of the COMPRESSED index — the
-    * [[streamIndexAppend]] topology for the IVFPQ artifact: the
-    * snapshot (frozen quantizer + PQ codebook + snapshot code
-    * postings) stages once; tonight's arrivals land in two real
-    * micro-batches, each ENCODING against the frozen artifact (both
-    * stages read back from the index files — the append job owns zero
-    * training state) and appending (cand_id, codes) files —
-    * exactly-once via the checkpoint. Encoding is stateless and
-    * appends are additive, so micro-batch boundaries cannot change the
-    * final code set: serving after the drain is bit-equal to the batch
-    * `sim_ivf_pq_index_incremental` gate and shares its oracle
-    * verbatim. At 100 TB this closes the compressed index's ingestion
-    * topology — a continuous crawl feeds 2-byte-code lists while
-    * serving reads a consistent snapshot, and the compactor absorbs
-    * the per-batch small files. */
-  def streamPqIndexAppend(s: SparkSession, dir: String): DataFrame = {
-    // snapshot-once + per-call delta, as streamIndexAppend
-    val snap = graft.operators.Similarity.stagedIvfPqIncSnapshot(s, dir)
-    val delta = callDir("spqidx")
-    runPqIndexAppendStream(s, dir, delta, snap)
-    graft.operators.Similarity.ivfPqServeUnion(s, dir, snap, delta)
-  }
-
-  /** The nightly encode-and-append stream for the COMPRESSED index —
-    * shared by the streaming gate (per-call delta) and the IVFPQ
-    * lifecycle gate (appends into its own full index). */
-  private[graft] def runPqIndexAppendStream(s: SparkSession, dir: String,
-      base: String, artifactBase: String = null): Unit = {
-    val art = Option(artifactBase).getOrElse(base)
-    val batch = graft.sources.Tables.embeddings(s, dir)
-      .filter(expr(graft.operators.Similarity.IvfIncBatchPred))
-      .select(col("vec_id").as("cand_id"), col("embedding").as("c_emb"))
-    new java.io.File(s"$base/src").mkdirs()
-    val t0 = System.currentTimeMillis()
-    stageNamedFile(batch.filter(col("cand_id") % 20 === 3),
-      s"$base/t0", s"$base/src/a_slice.json", t0 - 60000)
-    stageNamedFile(batch.filter(col("cand_id") % 20 =!= 3),
-      s"$base/t1", s"$base/src/b_slice.json", t0)
-    val in = s.readStream.schema("cand_id LONG, c_emb ARRAY<FLOAT>")
-      .option("maxFilesPerTrigger", 1).json(s"$base/src")
-    val q = in.writeStream.foreachBatch { (mb: DataFrame, bid: Long) =>
-      graft.operators.Similarity.appendIvfPqIncVectorsIdempotent(s, base, mb, bid, art)
+      Similarity.appendVectorsIdempotent(f)(s, base, mb, bid, art)
       ()
     }.option("checkpointLocation", s"$base/cp")
       .trigger(Trigger.AvailableNow()).start()

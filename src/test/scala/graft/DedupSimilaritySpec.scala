@@ -164,7 +164,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
   test("IVF ANN recall against brute force (Lloyd-refined, VERDICT r1 bar)") {
     val brute = Similarity.bruteTopK(spark, sf).select("query_id", "cand_id")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val ivf = Similarity.ivfTopK(spark, sf).select("query_id", "cand_id")
+    val ivf = Similarity.topK(Similarity.Ivf)(spark, sf).select("query_id", "cand_id")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val recall = brute.count(ivf.contains).toDouble / brute.size
     assert(recall >= 0.8, s"IVF recall@5 = $recall")
@@ -180,8 +180,8 @@ class DedupSimilaritySpec extends AnyFunSuite {
       df.select("query_id", "cosine", "rank").collect()
         .groupBy(_.getLong(0))
         .map { case (q, rs) => q -> rs.sortBy(_.getLong(2)).map(_.getDouble(1)).toSeq }
-    val ivfR = ranked(Similarity.ivfTopK(spark, sf))
-    val pqR = ranked(Similarity.ivfPqTopK(spark, sf))
+    val ivfR = ranked(Similarity.topK(Similarity.Ivf)(spark, sf))
+    val pqR = ranked(Similarity.topK(Similarity.IvfPq)(spark, sf))
     pqR.foreach { case (q, cosines) =>
       val ref = ivfR(q)
       cosines.zipWithIndex.foreach { case (c, i) =>
@@ -193,9 +193,9 @@ class DedupSimilaritySpec extends AnyFunSuite {
     // (PQ reconstruction is weakest exactly there; see the class note),
     // so the floor is deliberately loose. On structured corpora the
     // planted-pair tests are the recall instrument.
-    val ivf = Similarity.ivfTopK(spark, sf).select("query_id", "cand_id")
+    val ivf = Similarity.topK(Similarity.Ivf)(spark, sf).select("query_id", "cand_id")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val ivfpq = Similarity.ivfPqTopK(spark, sf).select("query_id", "cand_id")
+    val ivfpq = Similarity.topK(Similarity.IvfPq)(spark, sf).select("query_id", "cand_id")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val vsIvf = ivf.count(ivfpq.contains).toDouble / math.max(ivf.size, 1)
     assert(vsIvf >= 0.3, s"IVFPQ agreement with plain IVF = $vsIvf")
@@ -205,7 +205,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
     val bruteCos = Similarity.bruteTopK(spark, sf)
       .select("query_id", "cand_id", "cosine").collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
-    Similarity.ivfPqTopK(spark, sf).select("query_id", "cand_id", "cosine")
+    Similarity.topK(Similarity.IvfPq)(spark, sf).select("query_id", "cand_id", "cosine")
       .collect().foreach { r =>
         val k = (r.getLong(0), r.getLong(1))
         bruteCos.get(k).foreach(b => assert(b == r.getDouble(2),
@@ -713,7 +713,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
     // NOTE: ivfTopK trains eagerly at call time (the bounded per-sweep
     // collects), so the listener must cover construction too
     val df = try {
-      val d = Similarity.ivfTopK(spark, sf)
+      val d = Similarity.topK(Similarity.Ivf)(spark, sf)
       d.count()
       Thread.sleep(500) // let queued listener events drain
       d
@@ -960,8 +960,8 @@ class DedupSimilaritySpec extends AnyFunSuite {
     // the FAISS index-file shape done Spark-native: centroids + the
     // partitionBy(cent_id) postings must serve results bit-equal to
     // the in-memory IVF path...
-    val mem = Similarity.ivfTopK(spark, sf).collect().map(_.toString).toSet
-    val idx = Similarity.ivfTopKIndexed(spark, sf)
+    val mem = Similarity.topK(Similarity.Ivf)(spark, sf).collect().map(_.toString).toSet
+    val idx = Similarity.indexTopK(Similarity.Ivf)(spark, sf)
     assert(idx.collect().map(_.toString).toSet == mem,
       "persisted-index serving must equal the in-memory IVF results")
     // ...and the probe join must prune unprobed list partitions at
@@ -974,7 +974,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
 
   test("incremental IVF index: append is batch-only, snapshot files untouched, drift-gated") {
     val base = s"${System.getProperty("java.io.tmpdir")}/graft_spec_ivfinc_${System.nanoTime}"
-    Similarity.buildIvfIncSnapshot(spark, sf, base)
+    Similarity.buildSnapshot(Similarity.Ivf)(spark, sf, base)
     def listing(p: String): Map[String, Long] = {
       def walk(f: java.io.File): Seq[java.io.File] =
         if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
@@ -982,7 +982,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
         .map(f => f.getPath -> f.lastModified()).toMap
     }
     val before = listing(s"$base/postings")
-    Similarity.appendIvfIncBatch(spark, sf, base)
+    Similarity.appendBatch(Similarity.Ivf)(spark, sf, base)
     val after = listing(s"$base/postings")
     // the append only ADDS files into the inverted-list dirs — every
     // snapshot postings file survives byte-identical (name + mtime)
@@ -1000,7 +1000,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
       .replace("vec_id", "cand_id"))).count() == batchN,
       "appended postings must carry exactly the batch vectors")
     // serving prunes the postings partitions like the one-shot index
-    val served = Similarity.ivfIncTopK(spark, sf)
+    val served = Similarity.incTopK(Similarity.Ivf)(spark, sf)
     val plan = served.queryExecution.executedPlan.toString
     assert(plan.toLowerCase.contains("dynamicpruning"),
       "incremental-index serving must DPP-prune the postings scan")
@@ -1010,7 +1010,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
     // drift policy: the gate corpus's batch is from the trained
     // distribution → append branch (its drift reads only the held-out
     // generalization gap, under the bar)
-    val (drift, retrain) = Similarity.ivfIncRetrainSignal(spark, sf)
+    val (drift, retrain) = Similarity.retrainSignal(Similarity.Ivf)(spark, sf)
     assert(!retrain && math.abs(drift) < Similarity.IvfIncDriftBar,
       s"in-distribution batch must take the append branch (drift=$drift)")
     // a genuinely shifted batch: vectors in the orthogonal complement
@@ -1043,7 +1043,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
       .filter(expr(Similarity.IvfIncBatchPred))
       .select(col("vec_id")).as[Long].collect()
       .map(id => (id, vf)).toSeq.toDF("cand_id", "c_emb")
-    val (drift2, retrain2) = Similarity.ivfIncRetrainSignal(spark, sf, Some(shifted))
+    val (drift2, retrain2) = Similarity.retrainSignal(Similarity.Ivf)(spark, sf, Some(shifted))
     assert(retrain2 && drift2 > Similarity.IvfIncDriftBar,
       s"a shifted batch must trigger the retrain branch (drift=$drift2)")
   }
@@ -1052,22 +1052,22 @@ class DedupSimilaritySpec extends AnyFunSuite {
     val base = s"${System.getProperty("java.io.tmpdir")}/graft_spec_life_${System.nanoTime}"
     // the one and only training pass: the snapshot build (memo-warm or
     // not — what matters is the MAINTENANCE passes below add nothing)
-    Similarity.buildIvfIncSnapshot(spark, sf, base)
+    Similarity.buildSnapshot(Similarity.Ivf)(spark, sf, base)
     val trained = Similarity.trainingBuilds.get()
-    graft.streaming.Streams.runIndexAppendStream(spark, sf, base)
-    val retrain = Similarity.ivfIncDriftReportFrom(spark, sf, base)
+    graft.streaming.Streams.runIndexAppendStream(Similarity.Ivf)(spark, sf, base)
+    val retrain = Similarity.driftReportFrom(Similarity.Ivf)(spark, sf, base)
       .head().getAs[Boolean]("retrain")
     assert(!retrain, "gate corpus must take the append branch")
     val compacted = Similarity.compactIvfIncIndex(spark, base)
     assert(compacted.nonEmpty,
       "the streamed appends must have fattened at least one list")
-    val served = Similarity.ivfServeForSpec(spark, base, sf)
+    val served = Similarity.serveIndex(Similarity.Ivf)(spark, sf, base)
       .collect().map(_.toString).toSet
     assert(Similarity.trainingBuilds.get() == trained,
       "append/drift/compact/serve must run ZERO training jobs — they consume artifacts")
     // the composed lifecycle serves exactly what the plain incremental
     // gate serves (both hash-equal to the frozen-quantizer rebuild)
-    val inc = Similarity.ivfIncTopK(spark, sf).collect().map(_.toString).toSet
+    val inc = Similarity.incTopK(Similarity.Ivf)(spark, sf).collect().map(_.toString).toSet
     assert(served == inc, "lifecycle serving must equal the incremental gate")
     CacheScope.releaseAll(spark)
   }
@@ -1077,7 +1077,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
     // append under the frozen quantizer → imbalance consult (the
     // require inside asserts the verdict IS `retrain`) → fresh
     // quantizer on the combined corpus → postings rebuild
-    val base = Similarity.stagedIvfRetrainIndex(spark, sf)
+    val base = Similarity.stagedRetrainIndex(Similarity.Ivf)(spark, sf)
     // the retrain genuinely learned the spike mode: the shifted batch
     // now has a centroid of its own (its best cosine is exactly 1.0,
     // vs ≈0.24 against the frozen snapshot quantizer)
@@ -1092,11 +1092,11 @@ class DedupSimilaritySpec extends AnyFunSuite {
       s"every shifted-batch vector must sit on its own retrained centroid, min cos $batchMin")
     // the plain (unbalanced-free) maintained index takes the append
     // branch under the same bar
-    val rep = Similarity.ivfIncImbalanceReport(spark, sf).head()
+    val rep = Similarity.imbalanceReport(Similarity.Ivf)(spark, sf).head()
     assert(!rep.getAs[Boolean]("retrain"),
       s"the gate corpus's maintained index must read balanced: $rep")
     val trained = Similarity.trainingBuilds.get()
-    assert(Similarity.ivfRetrainTopK(spark, sf).count() > 0)
+    assert(Similarity.retrainTopK(Similarity.Ivf)(spark, sf).count() > 0)
     assert(Similarity.trainingBuilds.get() == trained,
       "serving the retrained artifact must run ZERO training jobs")
     CacheScope.releaseAll(spark)
@@ -1106,8 +1106,8 @@ class DedupSimilaritySpec extends AnyFunSuite {
     // coarse assignment ignores the codes, so the compressed artifact's
     // per-list counts must be IDENTICAL to the uncompressed report —
     // and the natural corpus reads balanced on both
-    val pq = Similarity.ivfPqIncImbalanceReport(spark, sf).head()
-    val ivf = Similarity.ivfIncImbalanceReport(spark, sf).head()
+    val pq = Similarity.imbalanceReport(Similarity.IvfPq)(spark, sf).head()
+    val ivf = Similarity.imbalanceReport(Similarity.Ivf)(spark, sf).head()
     assert(pq == ivf,
       s"code postings must carry the same assignment counts: $pq vs $ivf")
     assert(!pq.getAs[Boolean]("retrain"),
@@ -1133,9 +1133,9 @@ class DedupSimilaritySpec extends AnyFunSuite {
       assert(header == recount,
         s"size header drifted from the postings truth at $base")
     }
-    countsOf(Similarity.stagedIvfIncIndex(spark, sf),
+    countsOf(Similarity.stagedIncIndex(Similarity.Ivf)(spark, sf),
       "cand_id BIGINT, c_emb ARRAY<FLOAT>, cent_id BIGINT")
-    countsOf(Similarity.stagedIvfPqIncIndex(spark, sf),
+    countsOf(Similarity.stagedIncIndex(Similarity.IvfPq)(spark, sf),
       Similarity.PqPostingsSchema)
     CacheScope.releaseAll(spark)
   }
@@ -1145,7 +1145,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
     // consult with the SHIFTED batch (the require inside asserts the
     // verdict IS `retrain` — the branch this gate exists to prove) →
     // fresh quantizer + codebook on the combined corpus → re-encode
-    val base = Similarity.stagedIvfPqRetrainIndex(spark, sf)
+    val base = Similarity.stagedRetrainIndex(Similarity.IvfPq)(spark, sf)
     // the branch actually retrained: the artifact's quantizer is NOT
     // the frozen snapshot quantizer it started from
     val snapCents = Similarity
@@ -1156,7 +1156,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
     assert(served != snapCents,
       "the retrain branch must replace the frozen snapshot quantizer")
     val trained = Similarity.trainingBuilds.get()
-    assert(Similarity.ivfPqRetrainTopK(spark, sf).count() > 0)
+    assert(Similarity.retrainTopK(Similarity.IvfPq)(spark, sf).count() > 0)
     assert(Similarity.trainingBuilds.get() == trained,
       "serving the retrained artifact must run ZERO training jobs")
     CacheScope.releaseAll(spark)
@@ -1277,7 +1277,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
     // once per corpus version), then prove the fusion itself is pure
     // artifact consumption
     graft.operators.TextAnalysis.stagedBm25LifecycleIndex(spark, sf)
-    Similarity.stagedIvfLifecycleIndex(spark, sf)
+    Similarity.stagedLifecycleIndex(Similarity.Ivf)(spark, sf)
     val trained = Similarity.trainingBuilds.get()
     val fused = Similarity.hybridLifecycleTopK(spark, sf).collect()
     assert(fused.length == Similarity.HybridK)
@@ -1293,7 +1293,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
     // fusion that consumes them is pure artifact consumption with the
     // same pruning properties as every other hybrid gate
     graft.operators.TextAnalysis.stagedBm25RestatIndex(spark, sf)
-    Similarity.stagedIvfRetrainIndex(spark, sf)
+    Similarity.stagedRetrainIndex(Similarity.Ivf)(spark, sf)
     val trained = Similarity.trainingBuilds.get()
     val df = Similarity.hybridRetrainTopK(spark, sf)
     val plan = df.queryExecution.executedPlan.toString
@@ -1313,9 +1313,9 @@ class DedupSimilaritySpec extends AnyFunSuite {
   }
 
   test("IVFPQ lifecycle composition serves exactly the incremental gate's results") {
-    val life = Similarity.ivfPqLifecycleTopK(spark, sf)
+    val life = Similarity.lifecycleTopK(Similarity.IvfPq)(spark, sf)
       .collect().map(_.toString).toSet
-    val inc = Similarity.ivfPqIncTopK(spark, sf)
+    val inc = Similarity.incTopK(Similarity.IvfPq)(spark, sf)
       .collect().map(_.toString).toSet
     assert(life == inc,
       "composed IVFPQ lifecycle must serve the incremental gate's results")
@@ -1340,7 +1340,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
   test("PQ codebook drift: in-distribution batch appends, a spike batch retrains") {
     // append branch: the gate corpus's batch comes from the trained
     // distribution, so its reconstruction gap is only sampling noise
-    val (drift, retrain) = Similarity.ivfPqIncRetrainSignal(spark, sf)
+    val (drift, retrain) = Similarity.retrainSignal(Similarity.IvfPq)(spark, sf)
     assert(!retrain && math.abs(drift) < Similarity.PqIncDriftBar,
       s"in-distribution batch must take the append branch (drift=$drift)")
     // retrain branch: a spike batch concentrates its energy where no
@@ -1357,19 +1357,19 @@ class DedupSimilaritySpec extends AnyFunSuite {
       .select(col("vec_id")).as[Long].collect()
     val shifted = ids.map(id => (id, spike)).toSeq.toDF("cand_id", "c_emb")
       .select(col("cand_id"), col("c_emb").cast("array<float>").as("c_emb"))
-    val (d2, r2) = Similarity.ivfPqIncRetrainSignal(spark, sf, Some(shifted))
+    val (d2, r2) = Similarity.retrainSignal(Similarity.IvfPq)(spark, sf, Some(shifted))
     assert(r2 && d2 > Similarity.PqIncDriftBar,
       s"a spike batch must trigger the codebook retrain branch (drift=$d2)")
     // the oracled gate report agrees with the signal on the gate corpus
-    val rep = Similarity.ivfPqIncDriftReport(spark, sf).head()
+    val rep = Similarity.driftReport(Similarity.IvfPq)(spark, sf).head()
     assert(!rep.getAs[Boolean]("retrain"))
     assert(math.abs(rep.getAs[Double]("drift") - drift) < 1e-6,
       "report and signal must measure the same drift")
   }
 
   test("persisted IVFPQ index: codes-on-disk serving is bit-equal, scan reads codes not floats") {
-    val mem = Similarity.ivfPqTopK(spark, sf).collect().map(_.toString).toSet
-    val idx = Similarity.ivfPqTopKIndexed(spark, sf)
+    val mem = Similarity.topK(Similarity.IvfPq)(spark, sf).collect().map(_.toString).toSet
+    val idx = Similarity.indexTopK(Similarity.IvfPq)(spark, sf)
     assert(idx.collect().map(_.toString).toSet == mem,
       "serving from persisted codes must equal the in-memory IVFPQ results")
     val plan = idx.queryExecution.executedPlan.toString
@@ -1385,7 +1385,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
 
   test("index compaction: fat lists collapse to one file, thin lists untouched, serving bit-equal") {
     val base = s"${System.getProperty("java.io.tmpdir")}/graft_spec_cmp_${System.nanoTime}"
-    Similarity.buildIvfIncIndex(spark, sf, base)
+    Similarity.buildIncIndex(Similarity.Ivf)(spark, sf, base)
     def dirs(p: String): Map[String, Seq[java.io.File]] =
       new java.io.File(p).listFiles().filter(_.isDirectory)
         .filter(_.getName.startsWith("cent_id="))
@@ -1395,7 +1395,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
     val before = dirs(s"$base/postings")
     val thin = before.filter(_._2.size <= 1).keySet
     assert(before.exists(_._2.size > 1), "appended index must have multi-file lists to compact")
-    val served0 = Similarity.ivfServeForSpec(spark, base, sf).collect().map(_.toString).toSet
+    val served0 = Similarity.serveIndex(Similarity.Ivf)(spark, sf, base).collect().map(_.toString).toSet
     val compacted = Similarity.compactIvfIncIndex(spark, base)
     assert(compacted.nonEmpty, "compactor must select the fat lists")
     val after = dirs(s"$base/postings")
@@ -1407,13 +1407,13 @@ class DedupSimilaritySpec extends AnyFunSuite {
       val a = after(d).map(f => (f.getName, f.lastModified()))
       assert(a == b, s"thin list $d must be untouched by compaction")
     }
-    val served1 = Similarity.ivfServeForSpec(spark, base, sf).collect().map(_.toString).toSet
+    val served1 = Similarity.serveIndex(Similarity.Ivf)(spark, sf, base).collect().map(_.toString).toSet
     assert(served1 == served0, "compaction must not change serving results")
   }
 
   test("IVFPQ compaction: fat code lists collapse, thin untouched, serving bit-equal") {
     val base = s"${System.getProperty("java.io.tmpdir")}/graft_spec_pqcmp_${System.nanoTime}"
-    Similarity.buildIvfPqIncIndex(spark, sf, base)
+    Similarity.buildIncIndex(Similarity.IvfPq)(spark, sf, base)
     def dirs(p: String): Map[String, Seq[java.io.File]] =
       new java.io.File(p).listFiles().filter(_.isDirectory)
         .filter(_.getName.startsWith("cent_id="))
@@ -1423,7 +1423,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
     val before = dirs(s"$base/postings")
     val thin = before.filter(_._2.size <= 1).keySet
     assert(before.exists(_._2.size > 1), "appended PQ index must have multi-file lists")
-    val served0 = Similarity.ivfPqServeForSpec(spark, sf, base)
+    val served0 = Similarity.serveIndex(Similarity.IvfPq)(spark, sf, base)
       .collect().map(_.toString).toSet
     val compacted = Similarity.compactIvfIncIndex(spark, base,
       rowSchema = Similarity.PqPostingsSchema)
@@ -1435,14 +1435,14 @@ class DedupSimilaritySpec extends AnyFunSuite {
           s"thin list $d must be untouched")
       else assert(fsAfter.size == 1, s"$d still has ${fsAfter.size} files")
     }
-    val served1 = Similarity.ivfPqServeForSpec(spark, sf, base)
+    val served1 = Similarity.serveIndex(Similarity.IvfPq)(spark, sf, base)
       .collect().map(_.toString).toSet
     assert(served1 == served0, "PQ compaction must not change serving results")
   }
 
   test("incremental IVFPQ index: batch codes append-only, serving reads codes with DPP") {
     val base = s"${System.getProperty("java.io.tmpdir")}/graft_spec_pqinc_${System.nanoTime}"
-    Similarity.buildIvfPqIncSnapshot(spark, sf, base)
+    Similarity.buildSnapshot(Similarity.IvfPq)(spark, sf, base)
     def listing(p: String): Map[String, Long] = {
       def walk(f: java.io.File): Seq[java.io.File] =
         if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
@@ -1450,13 +1450,13 @@ class DedupSimilaritySpec extends AnyFunSuite {
         .map(f => f.getPath -> f.lastModified()).toMap
     }
     val before = listing(s"$base/postings")
-    Similarity.appendIvfPqIncBatch(spark, sf, base)
+    Similarity.appendBatch(Similarity.IvfPq)(spark, sf, base)
     val after = listing(s"$base/postings")
     before.foreach { case (p, m) =>
       assert(after.get(p).contains(m), s"snapshot code file rewritten: $p")
     }
     assert(after.size > before.size, "append must add batch code files")
-    val served = Similarity.ivfPqIncTopK(spark, sf)
+    val served = Similarity.incTopK(Similarity.IvfPq)(spark, sf)
     val plan = served.queryExecution.executedPlan.toString
     assert(plan.toLowerCase.contains("dynamicpruning"),
       "incremental IVFPQ serving must DPP-prune the postings scan")
@@ -1658,25 +1658,59 @@ class DedupSimilaritySpec extends AnyFunSuite {
     // the foreachBatch failure mode: batch commits its files, the
     // streaming offset does not, the batch REPLAYS — a blind append
     // would duplicate every row; the bid-keyed publish must converge
-    val base = s"${System.getProperty("java.io.tmpdir")}/graft_spec_idem_${System.nanoTime}"
-    Similarity.buildIvfIncSnapshot(spark, sf, base)
-    val batch = Tables.embeddings(spark, sf)
-      .filter(expr(graft.operators.Similarity.IvfIncBatchPred))
-      .select(col("vec_id").as("cand_id"), col("embedding").as("c_emb"))
-    Similarity.appendIvfIncVectorsIdempotent(spark, base, batch, 7L)
-    val n1 = spark.read.parquet(s"$base/postings").count()
-    val served1 = Similarity.ivfServeForSpec(spark, base, sf)
-      .collect().map(_.toString).toSet
-    Similarity.appendIvfIncVectorsIdempotent(spark, base, batch, 7L) // replay
-    assert(spark.read.parquet(s"$base/postings").count() == n1,
-      "replaying the same bid must not add rows")
-    assert(Similarity.ivfServeForSpec(spark, base, sf)
-      .collect().map(_.toString).toSet == served1,
-      "serving must be unchanged after a replay")
-    // and the result equals the batch-maintained index
-    assert(served1 == graft.operators.Similarity.ivfIncTopK(spark, sf)
-      .collect().map(_.toString).toSet)
+    for (f <- Seq(Similarity.Ivf, Similarity.IvfPq)) {
+      val base = s"${System.getProperty("java.io.tmpdir")}/graft_spec_idem_${f.name}_${System.nanoTime}"
+      Similarity.buildSnapshot(f)(spark, sf, base)
+      val batch = Tables.embeddings(spark, sf)
+        .filter(expr(graft.operators.Similarity.IvfIncBatchPred))
+        .select(col("vec_id").as("cand_id"), col("embedding").as("c_emb"))
+      Similarity.appendVectorsIdempotent(f)(spark, base, batch, 7L)
+      val n1 = spark.read.parquet(s"$base/postings").count()
+      val served1 = Similarity.serveIndex(f)(spark, sf, base)
+        .collect().map(_.toString).toSet
+      Similarity.appendVectorsIdempotent(f)(spark, base, batch, 7L) // replay
+      assert(spark.read.parquet(s"$base/postings").count() == n1,
+        "replaying the same bid must not add rows")
+      assert(Similarity.serveIndex(f)(spark, sf, base)
+        .collect().map(_.toString).toSet == served1,
+        "serving must be unchanged after a replay")
+      // and the result equals the batch-maintained index
+      assert(served1 == Similarity.incTopK(f)(spark, sf)
+        .collect().map(_.toString).toSet)
+    }
   }
+
+  for (f <- Seq(Similarity.Ivf, Similarity.IvfPq))
+    test(s"compaction crash recovery (${f.name}): a complete stage publishes, a partial one is discarded") {
+      val clean = Similarity.compactTopK(f)(spark, sf).collect().map(_.toString).toSet
+      for (complete <- Seq(true, false)) {
+        val base = s"${System.getProperty("java.io.tmpdir")}/graft_spec_cmpcrash_${f.name}_${System.nanoTime}"
+        Similarity.buildIncIndex(f)(spark, sf, base)
+        val fat = Similarity.fatLists(spark, base)
+        assert(fat.nonEmpty, "the appended index must have fat lists")
+        def rows() = spark.read.schema(f.rowSchema).parquet(s"$base/postings").count()
+        val nRows = rows()
+        // the state a crash leaves: the stage write of the fat lists
+        // finished (_SUCCESS) but nothing was published, or the stage
+        // write itself died part way (a partial stage, no _SUCCESS)
+        val stage = s"$base/postings_compact_stage"
+        val fatRows = spark.read.schema(f.rowSchema).parquet(s"$base/postings")
+          .filter(col("cent_id").isInCollection(fat))
+        (if (complete) fatRows else fatRows.limit(1))
+          .write.mode("overwrite").partitionBy("cent_id").parquet(stage)
+        if (!complete) assert(new java.io.File(s"$stage/_SUCCESS").delete())
+        val compacted = Similarity.compactIvfIncIndex(spark, base, rowSchema = f.rowSchema)
+        // a published stage already collapsed the fat lists; a discarded
+        // one leaves them for the compaction proper
+        assert(compacted.isEmpty == complete,
+          s"complete=$complete: compactor selected ${compacted.mkString(",")}")
+        assert(!new java.io.File(stage).exists(), "the stage must be gone")
+        assert(rows() == nRows, s"complete=$complete: recovery must keep every postings row")
+        assert(Similarity.fatLists(spark, base).isEmpty, "every list must be one file")
+        assert(Similarity.serveIndex(f)(spark, sf, base).collect().map(_.toString).toSet == clean,
+          s"complete=$complete: recovered serving must equal a clean compaction's")
+      }
+    }
 
   test("incremental SemDeDup: snapshot verdicts immutable, state reused, batch fully verdicted") {
     val out1 = Similarity.semanticDedupIncremental(spark, sf)
@@ -1795,12 +1829,12 @@ class DedupSimilaritySpec extends AnyFunSuite {
     // nothing at all on the second nightly run
     graft.operators.TextAnalysis.stagedBm25IncIndex(spark, sf)
     graft.operators.TextAnalysis.stagedBm25CompactIndex(spark, sf)
-    Similarity.stagedIvfIncIndex(spark, sf)
-    Similarity.stagedIvfCompactIndex(spark, sf)
-    Similarity.stagedIvfPqIncIndex(spark, sf)
-    Similarity.stagedIvfPqCompactIndex(spark, sf)
+    Similarity.stagedIncIndex(Similarity.Ivf)(spark, sf)
+    Similarity.stagedCompactIndex(Similarity.Ivf)(spark, sf)
+    Similarity.stagedIncIndex(Similarity.IvfPq)(spark, sf)
+    Similarity.stagedCompactIndex(Similarity.IvfPq)(spark, sf)
     Similarity.stagedIvfSkewedIndex(spark, sf)
-    Similarity.stagedIvfRetrainIndex(spark, sf)
+    Similarity.stagedRetrainIndex(Similarity.Ivf)(spark, sf)
     val trained = Similarity.trainingBuilds.get()
     val out = Similarity.maintenanceApply(spark, sf).collect()
     val delta = Similarity.trainingBuilds.get() - trained
@@ -1979,12 +2013,12 @@ class DedupSimilaritySpec extends AnyFunSuite {
     def keyOf(r: org.apache.spark.sql.Row) =
       (r.getAs[Long]("query_id"), r.getAs[Long]("cand_id"),
         r.getAs[Double]("cosine"), r.getAs[Long]("rank"))
-    val out = Similarity.ivfPqTwoNightTopK(spark, sf).collect()
+    val out = Similarity.twoNightTopK(Similarity.IvfPq)(spark, sf).collect()
     def night(n: Long) =
       out.filter(_.getAs[Long]("night") == n).map(keyOf).toSet
     // night 2 = the full incremental corpus — must serve row-identical
     // to the plain compressed incremental gate
-    val incRows = Similarity.ivfPqIncTopK(spark, sf).collect().map(keyOf).toSet
+    val incRows = Similarity.incTopK(Similarity.IvfPq)(spark, sf).collect().map(keyOf).toSet
     assert(night(2L) == incRows,
       "night-2 compressed serving must equal the one-shot incremental build")
     // night 1: one-shot frozen-quantizer-and-codebook build over
@@ -1992,12 +2026,12 @@ class DedupSimilaritySpec extends AnyFunSuite {
     // the code-list compaction's row preservation
     val oneShotBase =
       java.nio.file.Files.createTempDirectory("pqtwonight").toString
-    Similarity.buildIvfPqIncSnapshot(spark, sf, oneShotBase)
-    Similarity.appendIvfPqIncVectors(spark, oneShotBase,
+    Similarity.buildSnapshot(Similarity.IvfPq)(spark, sf, oneShotBase)
+    Similarity.appendVectors(Similarity.IvfPq)(spark, oneShotBase,
       Tables.embeddings(spark, sf)
         .filter(expr(Similarity.IvfNight1Pred))
         .select(col("vec_id").as("cand_id"), col("embedding").as("c_emb")))
-    val oneShot = Similarity.ivfPqServeForSpec(spark, sf, oneShotBase)
+    val oneShot = Similarity.serveIndex(Similarity.IvfPq)(spark, sf, oneShotBase)
       .collect().map(keyOf).toSet
     assert(night(1L) == oneShot,
       "night-1 promotion serving must equal the one-shot build over snapshot+night1")
@@ -2008,24 +2042,24 @@ class DedupSimilaritySpec extends AnyFunSuite {
     def keyOf(r: org.apache.spark.sql.Row) =
       (r.getAs[Long]("query_id"), r.getAs[Long]("cand_id"),
         r.getAs[Double]("cosine"), r.getAs[Long]("rank"))
-    val out = Similarity.ivfTwoNightTopK(spark, sf).collect()
+    val out = Similarity.twoNightTopK(Similarity.Ivf)(spark, sf).collect()
     def night(n: Long) =
       out.filter(_.getAs[Long]("night") == n).map(keyOf).toSet
     // night 2 = the full incremental corpus — must serve row-identical
     // to the plain incremental gate
-    val incRows = Similarity.ivfIncTopK(spark, sf).collect().map(keyOf).toSet
+    val incRows = Similarity.incTopK(Similarity.Ivf)(spark, sf).collect().map(keyOf).toSet
     assert(night(2L) == incRows,
       "night-2 serving must equal the one-shot incremental build")
     // night 1: one-shot frozen build over snapshot + night-1 arrivals,
     // UNCOMPACTED — equality also pins compaction row-preservation
     val oneShotBase =
       java.nio.file.Files.createTempDirectory("twonight").toString
-    Similarity.buildIvfIncSnapshot(spark, sf, oneShotBase)
-    Similarity.appendIvfIncVectors(spark, oneShotBase,
+    Similarity.buildSnapshot(Similarity.Ivf)(spark, sf, oneShotBase)
+    Similarity.appendVectors(Similarity.Ivf)(spark, oneShotBase,
       Tables.embeddings(spark, sf)
         .filter(expr(Similarity.IvfNight1Pred))
         .select(col("vec_id").as("cand_id"), col("embedding").as("c_emb")))
-    val oneShot = Similarity.ivfServeForSpec(spark, oneShotBase, sf)
+    val oneShot = Similarity.serveIndex(Similarity.Ivf)(spark, sf, oneShotBase)
       .collect().map(keyOf).toSet
     assert(night(1L) == oneShot,
       "night-1 promotion serving must equal the one-shot build over snapshot+night1")
@@ -2039,7 +2073,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
     assert(nBatch == 1L,
       s"the spiked batch is identical vectors — exactly one survives dedup, got $nBatch")
     val base = Similarity.stagedIvfDedupRetrainIndex(spark, sf)
-    val rep = Similarity.ivfImbalanceFrom(spark, base).head()
+    val rep = Similarity.imbalanceFrom(Similarity.Ivf)(spark, base).head()
     assert(!rep.getAs[Boolean]("retrain"),
       s"the dedup-rebuilt index must read balanced: $rep")
     assert(Similarity.fatLists(spark, base).isEmpty,

@@ -135,7 +135,7 @@ class StagedVersionSpec extends AnyFunSuite {
     val base = s"${System.getProperty("java.io.tmpdir")}/graft_spec_ver_ivf_${System.nanoTime}"
     val postingsSchema = "cand_id BIGINT, c_emb ARRAY<FLOAT>, cent_id BIGINT"
     Tables.embeddings(spark, sf).write.parquet(s"$base/embeddings.parquet")
-    val b1 = graft.operators.Similarity.stagedIvfCompactIndex(spark, base)
+    val b1 = graft.operators.Similarity.stagedCompactIndex(graft.operators.Similarity.Ivf)(spark, base)
     val n1 = spark.read.schema(postingsSchema).parquet(s"$b1/postings").count()
     assert(n1 == Tables.embeddings(spark, base).filter(col("vec_id") >= 10).count())
     // corpus RE-STAGED in place: half the vectors, same directory — the
@@ -144,7 +144,7 @@ class StagedVersionSpec extends AnyFunSuite {
     // the staging DIR now carries the full fingerprint too)
     Tables.embeddings(spark, sf).filter(col("vec_id") % 2 === 0)
       .write.mode("overwrite").parquet(s"$base/embeddings.parquet")
-    val b2 = graft.operators.Similarity.stagedIvfCompactIndex(spark, base)
+    val b2 = graft.operators.Similarity.stagedCompactIndex(graft.operators.Similarity.Ivf)(spark, base)
     assert(b2 != b1, "mutated corpus must stage a NEW index dir, not alias the old one")
     val n2 = spark.read.schema(postingsSchema).parquet(s"$b2/postings").count()
     val fresh = Tables.embeddings(spark, base).filter(col("vec_id") >= 10).count()

@@ -387,9 +387,9 @@ class StreamingPipelineSpec extends AnyFunSuite {
     // two maintenance topologies, one result: micro-batched appends
     // against the frozen quantizer must land the identical postings
     // set, so serving matches the batch sim_ivf_index_incremental gate
-    val streamed = Streams.streamIndexAppend(spark, sf)
+    val streamed = Streams.streamIndexAppend(graft.operators.Similarity.Ivf)(spark, sf)
       .collect().map(_.toString).toSet
-    val batch = graft.operators.Similarity.ivfIncTopK(spark, sf)
+    val batch = graft.operators.Similarity.incTopK(graft.operators.Similarity.Ivf)(spark, sf)
       .collect().map(_.toString).toSet
     assert(streamed == batch,
       "stream-maintained index serving must equal the batch-maintained one")
@@ -409,9 +409,9 @@ class StreamingPipelineSpec extends AnyFunSuite {
   test("streaming PQ index append serves bit-equal to the batch incremental path") {
     // the compressed-index twin: micro-batched encode-and-append under
     // the frozen quantizer+codebook must land the identical code set
-    val streamed = Streams.streamPqIndexAppend(spark, sf)
+    val streamed = Streams.streamIndexAppend(graft.operators.Similarity.IvfPq)(spark, sf)
       .collect().map(_.toString).toSet
-    val batch = graft.operators.Similarity.ivfPqIncTopK(spark, sf)
+    val batch = graft.operators.Similarity.incTopK(graft.operators.Similarity.IvfPq)(spark, sf)
       .collect().map(_.toString).toSet
     assert(streamed == batch,
       "stream-maintained PQ index serving must equal the batch-maintained one")

@@ -218,13 +218,13 @@ object SparkEntry {
     "sim_ivf_pq_index_compact" -> (Similarity.compactTopK(Similarity.IvfPq) _),
     "stream_index_append" -> (graft.streaming.Streams.streamIndexAppend(Similarity.Ivf) _),
     "text_bm25_topk" -> (TextAnalysis.bm25TopK _),
-    "text_bm25_index_topk" -> (TextAnalysis.bm25IndexTopK _),
-    "text_bm25_index_incremental" -> (TextAnalysis.bm25IndexIncTopK _),
-    "text_bm25_index_compact" -> (TextAnalysis.bm25IndexCompactTopK _),
+    "text_bm25_index_topk" -> (Similarity.indexTopK(Similarity.Bm25) _),
+    "text_bm25_index_incremental" -> (Similarity.incTopK(Similarity.Bm25) _),
+    "text_bm25_index_compact" -> (Similarity.compactTopK(Similarity.Bm25) _),
     "text_bm25_index_drift" -> (TextAnalysis.bm25IndexDriftReport _),
-    "text_bm25_lifecycle_topk" -> (TextAnalysis.bm25LifecycleTopK _),
+    "text_bm25_lifecycle_topk" -> (Similarity.lifecycleTopK(Similarity.Bm25) _),
     "text_bm25_index_restat" -> (TextAnalysis.bm25IndexRestatTopK _),
-    "stream_bm25_index_append" -> (graft.streaming.Streams.streamBm25IndexAppend _),
+    "stream_bm25_index_append" -> (graft.streaming.Streams.streamIndexAppend(Similarity.Bm25) _),
     "sim_hybrid_rrf_topk" -> (Similarity.hybridRrfTopK _),
     "sim_hybrid_index_topk" -> (Similarity.hybridIndexTopK _),
     "sim_hybrid_lifecycle_topk" -> (Similarity.hybridLifecycleTopK _),

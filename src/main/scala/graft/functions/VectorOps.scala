@@ -28,10 +28,4 @@ object VectorOps {
     * in this exact order on both engines. */
   def cosine(a: Column, b: Column): Column =
     dot(a, b) / sqrt(normSq(a) * normSq(b))
-
-  /** Cosine given precomputed squared norms (avoids recomputing norms
-    * inside an n×m candidate join — at scale norms are computed once
-    * per vector on the narrow side of the pipeline). */
-  def cosinePre(dotCol: Column, naSq: Column, nbSq: Column): Column =
-    dotCol / sqrt(naSq * nbSq)
 }

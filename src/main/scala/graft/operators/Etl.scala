@@ -135,8 +135,22 @@ object Etl {
     * the key survives partitionBy round-trip (non-empty, decoded). */
   def routeFile(s: SparkSession, dir: String): DataFrame = {
     import graft.plans.Pipeline
-    import org.apache.hadoop.fs.Path
     val base = s"${System.getProperty("java.io.tmpdir")}/graft_routefile_${ProcessHandle.current().pid()}"
+    stageRouteShards(s, dir, base)
+    val spec = Pipeline.TransferSpec(
+      source = Pipeline.SourceSpec(s"$base/src", Pipeline.Parquet),
+      routes = Seq(Pipeline.FileKey("src_file")))
+    Pipeline.run(s, spec, s"$base/out")
+    s.read.parquet(s"$base/out")
+      .groupBy(col("src_file"))
+      .agg(count(lit(1)).as("n_records"),
+        sum((col("value").cast("decimal(18,2)") * 100).cast("long")).as("sum_cents"))
+  }
+
+  /** The four named source shards of [[routeFile]], under `base/src`. */
+  private[graft] def stageRouteShards(s: SparkSession, dir: String,
+      base: String): Unit = {
+    import org.apache.hadoop.fs.Path
     val ev = Tables.events(s, dir).filter(col("event_id") < 2000)
       .select(col("event_id"), col("user_id"), col("value"))
     val fs = new Path(base).getFileSystem(s.sparkContext.hadoopConfiguration)
@@ -147,16 +161,11 @@ object Etl {
       ev.filter(pmod(col("user_id"), lit(4)) === shard)
         .coalesce(1).write.mode("overwrite").parquet(stage)
       val part = fs.globStatus(new Path(s"$stage/part-*"))(0).getPath
-      fs.rename(part, new Path(s"$base/src/events_$shard.parquet"))
+      // a refused rename returns false: going on would drop the
+      // shard's rows from the transfer
+      require(fs.rename(part, new Path(s"$base/src/events_$shard.parquet")),
+        s"could not stage $part as shard $shard")
     }
-    val spec = Pipeline.TransferSpec(
-      source = Pipeline.SourceSpec(s"$base/src", Pipeline.Parquet),
-      routes = Seq(Pipeline.FileKey("src_file")))
-    Pipeline.run(s, spec, s"$base/out")
-    s.read.parquet(s"$base/out")
-      .groupBy(col("src_file"))
-      .agg(count(lit(1)).as("n_records"),
-        sum((col("value").cast("decimal(18,2)") * 100).cast("long")).as("sum_cents"))
   }
 
   /** DataTypeMatch dispatch (reference config.go:247,

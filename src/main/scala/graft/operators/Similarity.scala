@@ -403,10 +403,11 @@ object Similarity {
   // probe only READS the probed lists: the broadcast probe join
   // triggers dynamic partition pruning on the postings scan
   // (spec-asserted). [[IvfFamily]] holds only what differs between the
-  // two families; every lifecycle step below — build, snapshot, batch
-  // and idempotent micro-batch append, compaction, the drift and
-  // imbalance consults, the two-night loop, retrain — is written once
-  // over it.
+  // two vector families; the drift and imbalance consults, the
+  // two-night loop and retrain are written once over it. The lexical
+  // BM25 postings index ([[Bm25]]) is the third [[IndexFamily]]: build,
+  // snapshot, batch and idempotent micro-batch append, compaction and
+  // the composed lifecycle are written once over all three.
   // -------------------------------------------------------------------
 
   /** A driver-resident header: (id, vector) rows sorted by id. */
@@ -447,10 +448,46 @@ object Similarity {
     * replaces the float vector, everything else matches the IVF row. */
   val PqPostingsSchema = "cand_id BIGINT, codes ARRAY<BIGINT>, cent_id BIGINT"
 
-  /** What differs between the two persisted index families — and
-    * nothing else. `name` is the maintenance document's `Family` value
-    * and the prefix of every staged-artifact tag. */
-  sealed abstract class IvfFamily(val name: String, val rowSchema: String) {
+  /** A consult the lifecycle runs on an appended artifact before it
+    * serves it: the verb it escalates to when fired, and its verdict on
+    * the artifact at `base` — over the default consult corpus or an
+    * override, against the registry bar or a document's override. */
+  private[graft] final case class Consult(name: String, escalateTo: String)(
+      val fired: (SparkSession, String, String, Option[DataFrame], Option[Double]) => Boolean)
+
+  /** What differs between the persisted index families — and nothing
+    * else. `name` is the maintenance document's `Family` value and the
+    * prefix of every staged-artifact tag; `table` versions the staged
+    * artifacts; postings rows (`rowSchema`) sit in one directory per
+    * `partitionCol` value — an inverted list or a term bucket. */
+  sealed abstract class IndexFamily(val name: String, val table: String,
+      val rowSchema: String, val partitionCol: String) {
+    /** Tonight's arrivals: the table rows matching it. */
+    def batchPred: String
+    /** Write the index of the table [rows matching `pred`] at `base`. */
+    def build(s: SparkSession, dir: String, base: String, pred: Option[String]): Unit
+    /** Append the table rows matching `pred` under the frozen headers. */
+    def append(s: SparkSession, dir: String, base: String, pred: String): Unit
+    /** Tonight's arrivals as the append stream stages them, id first. */
+    def arrivals(s: SparkSession, dir: String): DataFrame
+    /** Idempotent append of micro-batch `bid` (rows shaped like
+      * [[arrivals]]) into `base`, under the frozen headers at `art`. */
+    def appendIdempotent(s: SparkSession, base: String, rows: DataFrame,
+        bid: Long, art: String): Unit
+    /** The gate top-k served from `base` [plus a delta postings tree]. */
+    def serveFrom(s: SparkSession, dir: String, base: String,
+        delta: Option[String] = None): DataFrame
+    /** Every consult the lifecycle requires before it serves an appended
+      * artifact (and the planner may run on one). */
+    def consults: Seq[Consult]
+    /** The size header a maintained artifact carries, written last. */
+    def writeListCounts(s: SparkSession, base: String): Unit
+  }
+
+  /** What the two vector families add: the frozen quantizer headers,
+    * the encode step, serving from postings, and the drift consults. */
+  sealed abstract class IvfFamily(name: String, rowSchema: String)
+      extends IndexFamily(name, "embeddings", rowSchema, "cent_id") {
     /** The codebook trained beside the centroids (empty for IVF), over
       * the table [filtered by `pred`] or over an arbitrary frame. */
     def book(s: SparkSession, dir: String, pred: Option[String]): Header
@@ -467,12 +504,62 @@ object Similarity {
     /** The family's own drift consult: the gate report, the retrain
       * signal and the two-night loop read it. */
     def drift: DriftConsult
-    /** Every drift consult the lifecycle requires before it serves an
-      * appended artifact (and the planner may run on one). */
+    /** The drift consults behind [[consults]]. */
     def drifts: Seq[DriftConsult] = Seq(drift)
     /** The retrain trigger, on an artifact holding tonight's spiked
       * batch ([[spikeEmb]]) appended under the frozen quantizer. */
     def retrainFires(s: SparkSession, dir: String, base: String): Boolean
+
+    def batchPred: String = IvfIncBatchPred
+    def build(s: SparkSession, dir: String, base: String, pred: Option[String]): Unit =
+      writeIndex(this, s, base, trained(this, s, dir, pred),
+        pred.fold(corpus(s, dir))(p => corpus(s, dir).filter(expr(p))))
+    def append(s: SparkSession, dir: String, base: String, pred: String): Unit =
+      appendVectors(this)(s, base, corpus(s, dir).filter(expr(pred)))
+    def arrivals(s: SparkSession, dir: String): DataFrame =
+      Tables.embeddings(s, dir).filter(expr(batchPred))
+        .select(col("vec_id").as("cand_id"), col("embedding").as("c_emb"))
+    /** `art` locates the frozen headers (the delta topology reads them
+      * from the shared snapshot while appending into its own per-call
+      * dir). The micro-batch arrives as ONE source partition, so the
+      * staged write repartitions to an explicit width (AQE never
+      * coalesces one, unlike repartition(col)): otherwise a single task
+      * opens one parquet writer per touched list in turn. One file per
+      * touched list per bid either way. */
+    def appendIdempotent(s: SparkSession, base: String, rows: DataFrame,
+        bid: Long, art: String): Unit = {
+      val nlist = math.max(1, readHeader(s, s"$art/centroids").size)
+      publishStagedAppend(s, base, bid) { stage =>
+        encodeFrozen(this, s, art, rows)
+          .repartition(nlist, col("cent_id"))
+          .write.mode("overwrite").partitionBy("cent_id").parquet(stage)
+      }
+    }
+    def serveFrom(s: SparkSession, dir: String, base: String,
+        delta: Option[String]): DataFrame =
+      serveIndex(this)(s, dir, base, deltaBase = delta)
+    def consults: Seq[Consult] = drifts.map(d =>
+      Consult(d.name, "retrain") { (s, dir, base, corpusOpt, bar) =>
+        val rep = driftReportFrom(this)(s, dir, base, corpusOpt, d)
+        // an override compares the same measured `drift` the default
+        // verdict was computed from
+        bar.fold(firedOf(rep))(rep.head().getAs[Double]("drift") > _)
+      })
+
+    /** Per-list row counts, persisted as part of the maintained-index
+      * artifact at staging time — the FAISS invlists size-array
+      * discipline: a production index carries its list sizes in the
+      * artifact header, so the imbalance consult reads ≤ nlist header
+      * rows instead of re-listing and footer-scanning the whole postings
+      * directory on every call. Written LAST in the staging closure from
+      * the FINAL postings state; the staged maintained artifacts are
+      * immutable, so the header cannot go stale. Mid-maintenance bases
+      * (appended/compacted between consults) never carry one and keep
+      * the footer-scan truth path. */
+    def writeListCounts(s: SparkSession, base: String): Unit =
+      s.read.schema(rowSchema).parquet(s"$base/postings")
+        .groupBy(col("cent_id")).agg(count(lit(1)).as("c"))
+        .coalesce(1).write.mode("overwrite").parquet(s"$base/list_counts")
   }
 
   /** Uncompressed IVF: postings carry the float vectors; serving scores
@@ -553,9 +640,41 @@ object Similarity {
       firedOf(driftReportFrom(this)(s, dir, base, Some(driftedCorpus(s, dir))))
   }
 
+  /** The lexical family: the BM25 postings index over `documents`,
+    * whose kernels live in [[TextAnalysis]]. Its frozen headers are the
+    * collection statistics (dfs and corpus stats); appends tokenize only
+    * the batch, and the df-staleness consult decides between serving
+    * them frozen and the re-stat. Every gate serves the same query
+    * policy and fixed-point arithmetic as [[TextAnalysis.bm25TopK]]. */
+  object Bm25 extends IndexFamily("bm25", "documents",
+      TextAnalysis.Bm25PostingsSchema, "bucket") {
+    def batchPred: String = TextAnalysis.Bm25IncBatchPred
+    def build(s: SparkSession, dir: String, base: String, pred: Option[String]): Unit =
+      TextAnalysis.buildBm25Index(s, dir, base, pred)
+    def append(s: SparkSession, dir: String, base: String, pred: String): Unit =
+      TextAnalysis.appendBm25Batch(s, dir, base, pred)
+    def arrivals(s: SparkSession, dir: String): DataFrame =
+      Tables.documents(s, dir).filter(expr(batchPred))
+        .select(col("doc_id"), col("text"))
+    def appendIdempotent(s: SparkSession, base: String, rows: DataFrame,
+        bid: Long, art: String): Unit =
+      TextAnalysis.appendBm25Idempotent(s, base, rows, bid)
+    def serveFrom(s: SparkSession, dir: String, base: String,
+        delta: Option[String]): DataFrame =
+      TextAnalysis.bm25TopKFrom(s, base, delta)
+    val consults: Seq[Consult] = Seq(Consult("df_staleness", "restat") {
+      (s, _, base, _, bar) =>
+        TextAnalysis.bm25DriftFrom(s, base).collect().exists(r =>
+          bar.fold(r.getAs[Boolean]("retrain"))(
+            r.getAs[Long]("df_now") > r.getAs[Long]("df_frozen") * _))
+    })
+    /** The lexical index carries no size header. */
+    def writeListCounts(s: SparkSession, base: String): Unit = ()
+  }
+
   /** The maintenance document's `Family` values. */
-  private[graft] val IvfFamilies: Map[String, IvfFamily] =
-    Seq(Ivf, IvfPq).map(f => f.name -> f).toMap
+  private[graft] val IndexFamilies: Map[String, IndexFamily] =
+    Seq(Ivf, IvfPq, Bm25).map(f => f.name -> f).toMap
 
   private def writeHeader(s: SparkSession, path: String, rows: Header,
       idCol: String, vecCol: String): Unit = {
@@ -612,15 +731,14 @@ object Similarity {
 
   /** One staged artifact per (family, lifecycle step, corpus version);
     * the tag is the family name plus the step, e.g. `ivfpqinc`. */
-  private def staged(f: IvfFamily, step: String, s: SparkSession,
+  private[graft] def staged(f: IndexFamily, step: String, s: SparkSession,
       dir: String)(build: String => Unit): String =
     Tables.stagedArtifact(f.name + step, dir,
-        Tables.versionedKey(s, dir, "embeddings")) { base => build(base); base }
+        Tables.versionedKey(s, dir, f.table)) { base => build(base); base }
 
   /** The one-shot index over the whole corpus. */
-  def stagedIndex(f: IvfFamily)(s: SparkSession, dir: String): String =
-    staged(f, "idx", s, dir)(
-      writeIndex(f, s, _, trained(f, s, dir, None), corpus(s, dir)))
+  def stagedIndex(f: IndexFamily)(s: SparkSession, dir: String): String =
+    staged(f, "idx", s, dir)(f.build(s, dir, _, None))
 
   /** Gate: IVF ANN with nothing persisted — the family's quantizer
     * trained over the corpus (deterministic seeds + Lloyd refinement,
@@ -643,9 +761,9 @@ object Similarity {
   }
 
   /** Gate: serving from the persisted one-shot index — bit-equal to
-    * [[topK]], same oracle. */
-  def indexTopK(f: IvfFamily)(s: SparkSession, dir: String): DataFrame =
-    serveIndex(f)(s, dir, stagedIndex(f)(s, dir))
+    * [[topK]] (BM25: to [[TextAnalysis.bm25TopK]]), same oracle. */
+  def indexTopK(f: IndexFamily)(s: SparkSession, dir: String): DataFrame =
+    f.serveFrom(s, dir, stagedIndex(f)(s, dir))
 
   /** Serve a query batch (default: the gate query slice) from ANY index
     * of the family under `base`; `deltaBase` adds a second postings
@@ -664,11 +782,11 @@ object Similarity {
 
   // -------------------------------------------------------------------
   // Incremental maintenance — the nightly-crawl story for the serving
-  // index: a new embedding batch APPENDS into the existing inverted-list
-  // partitions (assignment against the frozen quantizer is one narrow
-  // pass; snapshot postings files are never rewritten), and the drift
-  // and imbalance consults decide when appending must give way to a
-  // retrain.
+  // index: a new batch APPENDS into the existing inverted-list
+  // partitions (assignment against the frozen quantizer, or the batch
+  // tokenize, is one narrow pass; snapshot postings files are never
+  // rewritten), and the family's consults decide when appending must
+  // give way to a retrain or a re-stat.
   // -------------------------------------------------------------------
 
   /** Nightly-batch split for the incremental-index gate: tonight's
@@ -690,21 +808,21 @@ object Similarity {
       Tables.versionedKey(s, dir, "embeddings"))(
       kmeansCentroidBuild(s, dir, Some(pred)))
 
-  /** The snapshot index (last night's state): quantizer [and codebook]
-    * trained WITHOUT tonight's batch, postings = the snapshot corpus. */
-  def buildSnapshot(f: IvfFamily)(s: SparkSession, dir: String, base: String): Unit =
-    writeIndex(f, s, base, trained(f, s, dir, Some(s"NOT ($IvfIncBatchPred)")),
-      corpus(s, dir).filter(!expr(IvfIncBatchPred)))
+  /** The snapshot index (last night's state): quantizer [and codebook],
+    * or collection statistics, trained WITHOUT tonight's batch,
+    * postings = the snapshot corpus. */
+  def buildSnapshot(f: IndexFamily)(s: SparkSession, dir: String, base: String): Unit =
+    f.build(s, dir, base, Some(s"NOT (${f.batchPred})"))
 
   /** The nightly append of tonight's batch — the FAISS `add` contract
-    * (adding vectors never retrains the quantizer). */
-  def appendBatch(f: IvfFamily)(s: SparkSession, dir: String, base: String): Unit =
-    appendVectors(f)(s, base, corpus(s, dir).filter(expr(IvfIncBatchPred)))
+    * (adding rows never retrains the frozen headers). */
+  def appendBatch(f: IndexFamily)(s: SparkSession, dir: String, base: String): Unit =
+    f.append(s, dir, base, f.batchPred)
 
   /** Snapshot build, then the nightly append. Per-night cost scales
     * with the batch: snapshot postings are untouched files, the header
     * read is bounded, the append writes |batch| rows. */
-  def buildIncIndex(f: IvfFamily)(s: SparkSession, dir: String, base: String): Unit = {
+  def buildIncIndex(f: IndexFamily)(s: SparkSession, dir: String, base: String): Unit = {
     buildSnapshot(f)(s, dir, base)
     appendBatch(f)(s, dir, base)
   }
@@ -766,42 +884,21 @@ object Similarity {
     fs.delete(stage, true)
   }
 
-  /** Streaming entry: idempotent append of micro-batch `bid`.
-    * `artifactBase` locates the frozen headers (defaults to the append
-    * target — the delta topology reads them from the shared snapshot
-    * while appending into its own per-call dir). The micro-batch
-    * arrives as ONE source partition, so the staged write repartitions
-    * to an explicit width (AQE never coalesces one, unlike
-    * repartition(col)): otherwise a single task opens one parquet
-    * writer per touched list in turn. One file per touched list per
-    * bid either way. */
-  private[graft] def appendVectorsIdempotent(f: IvfFamily)(s: SparkSession,
-      base: String, vecs: DataFrame, bid: Long,
-      artifactBase: String = null): Unit = {
-    val art = Option(artifactBase).getOrElse(base)
-    val nlist = math.max(1, readHeader(s, s"$art/centroids").size)
-    publishStagedAppend(s, base, bid) { stage =>
-      encodeFrozen(f, s, art, vecs)
-        .repartition(nlist, col("cent_id"))
-        .write.mode("overwrite").partitionBy("cent_id").parquet(stage)
-    }
-  }
-
   /** The IMMUTABLE snapshot half, staged once per corpus version — the
     * streaming gates append into their own per-call delta dirs and
     * serve the union, so a bench sweep pays the snapshot build once
     * instead of per rep. This IS the production topology: last night's
     * index is an immutable artifact; tonight's arrivals land beside it
     * until compaction folds them in. */
-  private[graft] def stagedSnapshot(f: IvfFamily)(s: SparkSession, dir: String): String =
+  private[graft] def stagedSnapshot(f: IndexFamily)(s: SparkSession, dir: String): String =
     staged(f, "snap", s, dir)(buildSnapshot(f)(s, dir, _))
 
   /** The maintained index (snapshot + tonight's append), with its
-    * per-list size header written LAST, from the final postings. */
-  def stagedIncIndex(f: IvfFamily)(s: SparkSession, dir: String): String =
+    * size header written LAST, from the final postings. */
+  def stagedIncIndex(f: IndexFamily)(s: SparkSession, dir: String): String =
     staged(f, "inc", s, dir) { base =>
       buildIncIndex(f)(s, dir, base)
-      writeListCounts(f, s, base)
+      f.writeListCounts(s, base)
     }
 
   /** Gate: serving from the incrementally-maintained index. Hash-equal
@@ -809,9 +906,11 @@ object Similarity {
     * (train on everything but the batch, assign everything), which is
     * what the DuckDB oracle computes — so the append path is proven
     * lossless, not recall-trusted. The gate corpus sits under the
-    * drift bars, so frozen serving is the correct branch. */
-  def incTopK(f: IvfFamily)(s: SparkSession, dir: String): DataFrame =
-    serveIndex(f)(s, dir, stagedIncIndex(f)(s, dir))
+    * drift bars, so frozen serving is the correct branch. The lexical
+    * contract is the same with frozen collection statistics: stats and
+    * df over the snapshot docs, term frequencies over all of them. */
+  def incTopK(f: IndexFamily)(s: SparkSession, dir: String): DataFrame =
+    f.serveFrom(s, dir, stagedIncIndex(f)(s, dir))
 
   /** Compact the inverted lists of a persisted (appended) index IN
     * PLACE — the small-files closure of the append contract: each
@@ -825,15 +924,10 @@ object Similarity {
     * preserved bit-exactly (floats round-trip parquet), so serving is
     * hash-equal before and after. One shuffle of the fat lists keyed
     * by list id; thin lists cost zero I/O. Returns the compacted list
-    * ids. */
-  def compactIvfIncIndex(s: SparkSession, base: String,
-      maxFiles: Int = 1,
-      // explicit read schema pins the partition-column type (inference
-      // yields INT for numeric dirs); the PQ index passes its codes row
-      rowSchema: String = Ivf.rowSchema,
-      // the BM25 postings index passes "bucket" — the compactor is the
-      // same for any bounded-partition inverted layout
-      partitionCol: String = "cent_id"): Seq[Long] = {
+    * ids. The explicit read schema pins the partition-column type
+    * (inference yields INT for numeric dirs). */
+  def compactIndex(f: IndexFamily)(s: SparkSession, base: String,
+      maxFiles: Int = 1): Seq[Long] = {
     val post = new org.apache.hadoop.fs.Path(s"$base/postings")
     val fs = post.getFileSystem(s.sparkContext.hadoopConfiguration)
     // publish from a DURABLE stage, never from the directory being
@@ -850,9 +944,9 @@ object Similarity {
     def publishStage(): Unit =
       graft.GraftSession.withSqlConfs(s,
           "spark.sql.sources.partitionOverwriteMode" -> "dynamic") {
-        s.read.schema(rowSchema).parquet(stage.toString)
-          .repartition(s.sparkContext.defaultParallelism, col(partitionCol))
-          .write.mode("overwrite").partitionBy(partitionCol)
+        s.read.schema(f.rowSchema).parquet(stage.toString)
+          .repartition(s.sparkContext.defaultParallelism, col(f.partitionCol))
+          .write.mode("overwrite").partitionBy(f.partitionCol)
           .parquet(s"$base/postings")
       }
     if (fs.exists(stage)) {
@@ -866,12 +960,12 @@ object Similarity {
     // would select over a half-published postings state — recovered
     // lists get pointlessly rewritten and a list that only reads fat
     // post-recovery stays uncompacted until the next call
-    val fat = fatLists(s, base, partitionCol, maxFiles)
+    val fat = fatLists(f)(s, base, maxFiles)
     if (fat.nonEmpty) {
-      s.read.schema(rowSchema).parquet(s"$base/postings")
-        .filter(col(partitionCol).isInCollection(fat))
-        .repartition(math.max(1, fat.size), col(partitionCol))
-        .write.mode("overwrite").partitionBy(partitionCol)
+      s.read.schema(f.rowSchema).parquet(s"$base/postings")
+        .filter(col(f.partitionCol).isInCollection(fat))
+        .repartition(math.max(1, fat.size), col(f.partitionCol))
+        .write.mode("overwrite").partitionBy(f.partitionCol)
         .parquet(stage.toString)
       publishStage()
       fs.delete(stage, true)
@@ -892,30 +986,30 @@ object Similarity {
     * fully rewritten artifact) — so a layout regression that breaks
     * the contract hash-fails the planner gate loudly instead of
     * silently changing compaction behavior. */
-  private[graft] def fatLists(s: SparkSession, base: String,
-      partitionCol: String = "cent_id", maxFiles: Int = 1): Seq[Long] = {
+  private[graft] def fatLists(f: IndexFamily)(s: SparkSession, base: String,
+      maxFiles: Int = 1): Seq[Long] = {
     val post = new org.apache.hadoop.fs.Path(s"$base/postings")
     val fs = post.getFileSystem(s.sparkContext.hadoopConfiguration)
     fs.listStatus(post).filter(_.isDirectory)
-      .filter(_.getPath.getName.startsWith(s"$partitionCol="))
+      .filter(_.getPath.getName.startsWith(s"${f.partitionCol}="))
       .filter { d =>
         fs.listStatus(d.getPath)
           .count(_.getPath.getName.endsWith(".parquet")) > maxFiles
       }
-      .map(_.getPath.getName.stripPrefix(s"$partitionCol=").toLong).toSeq.sorted
+      .map(_.getPath.getName.stripPrefix(s"${f.partitionCol}=").toLong).toSeq.sorted
   }
 
   /** Gate: serving from a dedicated staged copy of the maintained index
     * after compaction. Same oracle as the uncompacted gate: compaction
     * moves rows between files, never changes them. */
-  def stagedCompactIndex(f: IvfFamily)(s: SparkSession, dir: String): String =
+  def stagedCompactIndex(f: IndexFamily)(s: SparkSession, dir: String): String =
     staged(f, "cmp", s, dir) { base =>
       buildIncIndex(f)(s, dir, base)
-      compactIvfIncIndex(s, base, rowSchema = f.rowSchema)
+      compactIndex(f)(s, base)
     }
 
-  def compactTopK(f: IvfFamily)(s: SparkSession, dir: String): DataFrame =
-    serveIndex(f)(s, dir, stagedCompactIndex(f)(s, dir))
+  def compactTopK(f: IndexFamily)(s: SparkSession, dir: String): DataFrame =
+    f.serveFrom(s, dir, stagedCompactIndex(f)(s, dir))
 
   /** COMPOSITE nightly-maintenance lifecycle over ONE staged index —
     * the pieces exist as separate gates; this gate proves they
@@ -932,20 +1026,20 @@ object Similarity {
     * — the incremental gate's oracle — because appends move rows in,
     * compaction moves rows between files, and the consults move
     * nothing. */
-  def stagedLifecycleIndex(f: IvfFamily)(s: SparkSession, dir: String): String =
+  def stagedLifecycleIndex(f: IndexFamily)(s: SparkSession, dir: String): String =
     staged(f, "life", s, dir) { base =>
       buildSnapshot(f)(s, dir, base)
       graft.streaming.Streams.runIndexAppendStream(f)(s, dir, base)
-      f.drifts.foreach { d =>
-        require(!firedOf(driftReportFrom(f)(s, dir, base, consult = d)),
-          s"${f.name} lifecycle gate expects the ${d.name} append branch; " +
-            "a drifted corpus must retrain, not serve the frozen index")
+      f.consults.foreach { c =>
+        require(!c.fired(s, dir, base, None, None),
+          s"${f.name} lifecycle gate expects the ${c.name} append branch; " +
+            s"a fired consult must ${c.escalateTo}, not serve the frozen index")
       }
-      compactIvfIncIndex(s, base, rowSchema = f.rowSchema)
+      compactIndex(f)(s, base)
     }
 
-  def lifecycleTopK(f: IvfFamily)(s: SparkSession, dir: String): DataFrame =
-    serveIndex(f)(s, dir, stagedLifecycleIndex(f)(s, dir))
+  def lifecycleTopK(f: IndexFamily)(s: SparkSession, dir: String): DataFrame =
+    f.serveFrom(s, dir, stagedLifecycleIndex(f)(s, dir))
 
   // -------------------------------------------------------------------
   // Two-night executor loop: the reference's scheduler is a LOOP over
@@ -979,17 +1073,17 @@ object Similarity {
     * let slow drift ratchet past the bar one night at a time). */
   private def runMaintenanceNight(f: IvfFamily, s: SparkSession, dir: String,
       base: String, nightPred: String, label: String): Unit = {
-    appendVectors(f)(s, base, corpus(s, dir).filter(expr(nightPred)))
+    f.append(s, dir, base, nightPred)
     val consultCorpus = Tables.embeddingsParallel(s, dir)
       .filter(!expr(IvfIncBatchPred) || expr(nightPred))
       .select(col("vec_id").as("cand_id"), col("embedding").as("c_emb"))
     require(!firedOf(driftReportFrom(f)(s, dir, base, Some(consultCorpus))),
       s"${f.name} two-night loop: $label expected the in-distribution " +
         "append branch; a drifted night must retrain")
-    require(fatLists(s, base).nonEmpty, s"${f.name} two-night loop: $label " +
+    require(fatLists(f)(s, base).nonEmpty, s"${f.name} two-night loop: $label " +
       "append left no fat lists — the small_files consult should fire")
-    compactIvfIncIndex(s, base, rowSchema = f.rowSchema)
-    require(fatLists(s, base).isEmpty, s"${f.name} two-night loop: $label " +
+    compactIndex(f)(s, base)
+    require(fatLists(f)(s, base).isEmpty, s"${f.name} two-night loop: $label " +
       "compact did not clear the small_files consult")
     serveIndex(f)(s, dir, base)
       .write.mode("overwrite").parquet(s"$base/${label}_topk")
@@ -1066,21 +1160,6 @@ object Similarity {
     * oracle (the frozen-quantizer assignment counted per list). */
   def imbalanceReport(f: IvfFamily)(s: SparkSession, dir: String): DataFrame =
     imbalanceFrom(f)(s, stagedIncIndex(f)(s, dir))
-
-  /** Per-list row counts, persisted as part of the maintained-index
-    * artifact at staging time — the FAISS invlists size-array
-    * discipline: a production index carries its list sizes in the
-    * artifact header, so the imbalance consult reads ≤ nlist header
-    * rows instead of re-listing and footer-scanning the whole postings
-    * directory on every call. Written LAST in the staging closure from
-    * the FINAL postings state; the staged maintained artifacts are
-    * immutable, so the header cannot go stale. Mid-maintenance bases
-    * (appended/compacted between consults) never carry one and keep
-    * the footer-scan truth path. */
-  private def writeListCounts(f: IvfFamily, s: SparkSession, base: String): Unit =
-    s.read.schema(f.rowSchema).parquet(s"$base/postings")
-      .groupBy(col("cent_id")).agg(count(lit(1)).as("c"))
-      .coalesce(1).write.mode("overwrite").parquet(s"$base/list_counts")
 
   private[graft] def imbalanceFrom(f: IvfFamily)(s: SparkSession,
       base: String): DataFrame = {
@@ -1307,24 +1386,17 @@ object Similarity {
       family: String, index: String): (String, Option[DataFrame]) = {
     def unknown: Nothing = throw new IllegalArgumentException(
       s"unknown maintenance artifact kind (Family '$family', Index '$index')")
-    if (family == "bm25") index match {
-      case "incremental" => (TextAnalysis.stagedBm25IncIndex(s, dir), None)
-      case "compacted" => (TextAnalysis.stagedBm25CompactIndex(s, dir), None)
-      case "restat" => (TextAnalysis.stagedBm25RestatIndex(s, dir), None)
+    (index, IndexFamilies.getOrElse(family, unknown)) match {
+      case ("incremental", f) => (stagedIncIndex(f)(s, dir), None)
+      case ("compacted", f) => (stagedCompactIndex(f)(s, dir), None)
+      case ("restat", Bm25) => (TextAnalysis.stagedBm25RestatIndex(s, dir), None)
+      case ("retrained", f: IvfFamily) =>
+        (stagedRetrainIndex(f)(s, dir), Some(driftedCorpus(s, dir)))
+      case ("skewed", Ivf) =>
+        (stagedIvfSkewedIndex(s, dir), Some(driftedCorpus(s, dir)))
+      case ("dedup_retrained", Ivf) => (stagedIvfDedupRetrainIndex(s, dir),
+        Some(candidates(dedupedDriftedEmbeddings(s, dir))))
       case _ => unknown
-    } else {
-      val f = IvfFamilies.getOrElse(family, unknown)
-      (index, f) match {
-        case ("incremental", _) => (stagedIncIndex(f)(s, dir), None)
-        case ("compacted", _) => (stagedCompactIndex(f)(s, dir), None)
-        case ("retrained", _) =>
-          (stagedRetrainIndex(f)(s, dir), Some(driftedCorpus(s, dir)))
-        case ("skewed", Ivf) =>
-          (stagedIvfSkewedIndex(s, dir), Some(driftedCorpus(s, dir)))
-        case ("dedup_retrained", Ivf) => (stagedIvfDedupRetrainIndex(s, dir),
-          Some(candidates(dedupedDriftedEmbeddings(s, dir))))
-        case _ => unknown
-      }
     }
   }
 
@@ -1339,13 +1411,9 @@ object Similarity {
       family: String, base: String, corpusOpt: Option[DataFrame],
       consult: String, bars: Map[String, Double] = Map.empty): ConsultRow = {
     val bar = bars.get(consult)
-    // the vector consults read an IVF-family artifact's headers/postings
-    def ivf: IvfFamily = IvfFamilies.getOrElse(family,
-      throw new IllegalArgumentException(
-        s"$consult consults a vector index — not a $family artifact"))
-    consult match {
-      case "list_imbalance" =>
-        val rep = imbalanceFrom(ivf)(s, base)
+    (consult, IndexFamilies(family)) match {
+      case ("list_imbalance", f: IvfFamily) =>
+        val rep = imbalanceFrom(f)(s, base)
         val fired = bar match {
           case None => firedOf(rep)
           case Some(b) =>
@@ -1354,35 +1422,20 @@ object Similarity {
               b * r.getAs[Long]("n_rows")
         }
         ConsultRow(artifact, "retrain", consult, fired)
-      case "df_staleness" =>
-        require(family == "bm25",
-          s"df_staleness consults the lexical dfs — not a $family artifact")
-        val rows = TextAnalysis.bm25DriftFrom(s, base).collect()
-        val fired = bar match {
-          case None => rows.exists(_.getAs[Boolean]("retrain"))
-          case Some(b) => rows.exists(r =>
-            r.getAs[Long]("df_now") > r.getAs[Long]("df_frozen") * b)
-        }
-        ConsultRow(artifact, "restat", consult, fired)
-      case "small_files" =>
+      case ("small_files", f) =>
         val maxFiles = bar.map { b =>
           require(b >= 1 && b == math.floor(b),
             s"small_files bar must be a whole per-list file count >= 1, got $b")
           b.toInt
         }.getOrElse(1)
         ConsultRow(artifact, "compact", consult,
-          fatLists(s, base,
-            if (family == "bm25") "bucket" else "cent_id", maxFiles).nonEmpty)
-      case c =>
-        // the drift consults: the family's own plus the coarse one
-        val d = ivf.drifts.find(_.name == c).getOrElse(
+          fatLists(f)(s, base, maxFiles).nonEmpty)
+      case (c, f) =>
+        // the family's lifecycle consults: drift, or df staleness
+        val k = f.consults.find(_.name == c).getOrElse(
           throw new IllegalArgumentException(
             s"unknown consult '$c' for a $family artifact"))
-        val rep = driftReportFrom(ivf)(s, dir, base, corpusOpt, d)
-        // an override compares the same measured `drift` the default
-        // verdict was computed from
-        ConsultRow(artifact, "retrain", c,
-          bar.fold(firedOf(rep))(rep.head().getAs[Double]("drift") > _))
+        ConsultRow(artifact, k.escalateTo, c, k.fired(s, dir, base, corpusOpt, bar))
     }
   }
 
@@ -2310,7 +2363,7 @@ object Similarity {
       queryDocs: Seq[Long]): DataFrame = {
     hybridBatchFusions.incrementAndGet()
     import s.implicits._
-    val lexBase = TextAnalysis.stagedBm25Index(s, dir)
+    val lexBase = stagedIndex(Bm25)(s, dir)
     // ---- per-query query terms (bounded: the batch docs' own text) ----
     val qtf = Tables.documents(s, dir)
       .filter(col("doc_id").isInCollection(queryDocs))
@@ -2485,7 +2538,7 @@ object Similarity {
     * freshly rebuilt. */
   def hybridLifecycleTopK(s: SparkSession, dir: String): DataFrame =
     hybridIndexTopKFor(s, dir, HybridQueryDoc,
-      lexBaseOpt = Some(TextAnalysis.stagedBm25LifecycleIndex(s, dir)),
+      lexBaseOpt = Some(stagedLifecycleIndex(Bm25)(s, dir)),
       ivfBaseOpt = Some(stagedLifecycleIndex(Ivf)(s, dir)))
 
   /** HYBRID serving across an arm RETRAIN:
@@ -2533,7 +2586,7 @@ object Similarity {
       .orderBy(col("tf").desc, col("term")).limit(HybridQueryTerms)
       .select(col("term"))
     val lexTop = TextAnalysis.bm25IndexScores(s,
-        lexBaseOpt.getOrElse(TextAnalysis.stagedBm25Index(s, dir)),
+        lexBaseOpt.getOrElse(stagedIndex(Bm25)(s, dir)),
         qterms, HybridQueryTerms)
       .filter(col("doc_id") =!= queryDoc)
       .select(col("doc_id"), col("score_q").as("side_q"))

@@ -1122,11 +1122,17 @@ object TextAnalysis {
       .select(col("doc_id"), bm25Qv.as("qv"))
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_terms_hit"), sum(col("qv")).as("score_q"))
+    bm25Ranked(scored)
+  }
+
+  /** The top [[Bm25K]] of (doc_id, n_terms_hit, score_q) rows, score
+    * rendered and ranked — the output contract of every BM25 gate. */
+  private def bm25Ranked(scored: DataFrame): DataFrame = {
     val top = scored.orderBy(col("score_q").desc, col("doc_id")).limit(Bm25K)
     top.select(col("doc_id"), col("n_terms_hit"),
-        (col("score_q").cast("double") / lit(1e7)).as("score"),
-        row_number().over(org.apache.spark.sql.expressions.Window
-          .orderBy(col("score_q").desc, col("doc_id"))).cast("long").as("rank"))
+      (col("score_q").cast("double") / lit(1e7)).as("score"),
+      row_number().over(org.apache.spark.sql.expressions.Window
+        .orderBy(col("score_q").desc, col("doc_id"))).cast("long").as("rank"))
   }
 
   /** Shared BM25 corpus statistics — (term frequencies, per-doc
@@ -1145,8 +1151,10 @@ object TextAnalysis {
   }
 
   // -------------------------------------------------------------------
-  // Persisted BM25 postings index (VERDICT r9 #1) — the LEXICAL twin of
-  // the persisted IVF index: [[bm25TopK]] recomputes corpus-wide
+  // Persisted BM25 postings index — the kernels of the lexical index
+  // family ([[Similarity.Bm25]]), whose build, snapshot, append,
+  // compaction and lifecycle steps the index engine in [[Similarity]]
+  // writes once for every family: [[bm25TopK]] recomputes corpus-wide
   // tokenize/tf/df per invocation, which is the prototype plan; a
   // serving system tokenizes the corpus ONCE into an on-disk inverted
   // index and each query reads only its terms' postings. Layout under
@@ -1212,12 +1220,12 @@ object TextAnalysis {
       docs: DataFrame, bid: Long): Unit =
     Similarity.publishStagedAppend(s, base, bid, "bucket") { stage =>
       bm25PostingsOf(bm25TfsOf(docs))
-        // explicit-width repartition (r17, guide §2.6/§6.2): AQE
-        // coalesces the tf groupBy's tiny shuffle to ~1 partition, so
-        // the dynamic partitionBy write was one task serially opening
-        // ~Bm25Buckets parquet writers; a user-fixed width is exempt
-        // from coalescing and spreads the buckets across tasks. One
-        // file per touched bucket per bid either way.
+        // explicit-width repartition: AQE coalesces the tf groupBy's
+        // tiny shuffle to ~1 partition, so the dynamic partitionBy
+        // write would be one task serially opening ~Bm25Buckets parquet
+        // writers; a user-fixed width is exempt from coalescing and
+        // spreads the buckets across tasks. One file per touched
+        // bucket per bid either way.
         .repartition(Bm25Buckets, col("bucket"))
         .write.mode("overwrite").partitionBy("bucket").parquet(stage)
     }
@@ -1228,24 +1236,29 @@ object TextAnalysis {
     * vocabulary-bounded dfs aggregation, and the 1-row stats. `pred`
     * restricts the corpus (the incremental snapshot build). */
   def buildBm25Index(s: SparkSession, dir: String, base: String,
-      pred: Option[String] = None): String = {
+      pred: Option[String]): Unit = {
     val tfs = bm25TfsDenorm(s, dir, pred)
-    tfs.groupBy(col("doc_id")).agg(first(col("len")).as("len"))
-      .agg(count(lit(1)).as("n_docs"), sum(col("len")).as("total_len"))
-      .coalesce(1).write.mode("overwrite").parquet(s"$base/stats")
-    // explicit repartition widths (see Similarity.writeIndex):
-    // repartition(col) is AQE-coalescible and a coalesced write opens
-    // all ≤Bm25Buckets parquet writers serially in one task; the fixed
-    // width is exempt and keeps one file per bucket (each bucket whole
-    // in one task)
-    tfs.groupBy(col("term")).agg(count(lit(1)).as("df"))
-      .withColumn("bucket", termBucket(col("term")))
-      .repartition(Bm25Buckets, col("bucket"))
-      .write.mode("overwrite").partitionBy("bucket").parquet(s"$base/dfs")
+    writeBm25Stats(tfs, s"$base/stats", s"$base/dfs")
     bm25PostingsOf(tfs)
       .repartition(Bm25Buckets, col("bucket"))
       .write.mode("overwrite").partitionBy("bucket").parquet(s"$base/postings")
-    base
+  }
+
+  /** The collection statistics of (doc_id, len, term) rows — a tf frame
+    * or the postings themselves: the 1-row corpus stats at `stats` and
+    * the per-term dfs at `dfs`. Explicit repartition widths (see
+    * Similarity.writeIndex): repartition(col) is AQE-coalescible and a
+    * coalesced write opens all ≤Bm25Buckets parquet writers serially in
+    * one task; the fixed width is exempt and keeps one file per bucket
+    * (each bucket whole in one task). */
+  private def writeBm25Stats(rows: DataFrame, stats: String, dfs: String): Unit = {
+    rows.groupBy(col("doc_id")).agg(first(col("len")).as("len"))
+      .agg(count(lit(1)).as("n_docs"), sum(col("len")).as("total_len"))
+      .coalesce(1).write.mode("overwrite").parquet(stats)
+    rows.groupBy(col("term")).agg(count(lit(1)).as("df"))
+      .withColumn("bucket", termBucket(col("term")))
+      .repartition(Bm25Buckets, col("bucket"))
+      .write.mode("overwrite").partitionBy("bucket").parquet(dfs)
   }
 
   /** Nightly append under the FROZEN-STATS contract (the FAISS-`add`
@@ -1296,7 +1309,8 @@ object TextAnalysis {
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
       .toSeq.toDF("term", "df", "bucket")
     // bounded collect #3: the 1-row corpus stats → literals (no 1-row
-    // cross-join combine in the serving plan); header-memoized (r17)
+    // cross-join combine in the serving plan); header-memoized, as
+    // every serving call and micro-batch reads the same immutable file
     val (stNDocs, stTotalLen) = bm25CorpusStats(s, base)
     // the streamed-maintenance topology serves snapshot ∪ per-call
     // delta postings (frozen df/stats stay on the snapshot side) —
@@ -1330,7 +1344,7 @@ object TextAnalysis {
   }
 
   /** The 1-row corpus stats of an index artifact, as driver values —
-    * header-memoized with file-signature revalidation (r17; see
+    * header-memoized with file-signature revalidation (see
     * [[graft.sources.ArtifactHeaders]]). */
   private[operators] def bm25CorpusStats(s: SparkSession,
       base: String): (Long, Long) =
@@ -1346,8 +1360,8 @@ object TextAnalysis {
     s.read.schema(Bm25PostingsSchema).parquet(s"$base/postings")
       .filter(col("bucket").isInCollection(buckets))
 
-  /** Top-k + rank rendering shared by the index gates — identical
-    * output contract to [[bm25TopK]]. */
+  /** The gate top-k served from the index at `base` [plus a delta
+    * postings tree] — identical output contract to [[bm25TopK]]. */
   private[graft] def bm25TopKFrom(s: SparkSession, base: String,
       deltaBase: Option[String] = None): DataFrame = {
     // gate query policy: top terms by df, ties lexicographic — drawn
@@ -1355,87 +1369,14 @@ object TextAnalysis {
     val qterms = readDfs(s, base)
       .orderBy(col("df").desc, col("term")).limit(Bm25QueryTerms)
       .select(col("term"))
-    val scored = bm25IndexScores(s, base, qterms, Bm25QueryTerms, deltaBase)
-    val top = scored.orderBy(col("score_q").desc, col("doc_id")).limit(Bm25K)
-    top.select(col("doc_id"), col("n_terms_hit"),
-      (col("score_q").cast("double") / lit(1e7)).as("score"),
-      row_number().over(org.apache.spark.sql.expressions.Window
-        .orderBy(col("score_q").desc, col("doc_id"))).cast("long").as("rank"))
+    bm25Ranked(bm25IndexScores(s, base, qterms, Bm25QueryTerms, deltaBase))
   }
-
-  def stagedBm25Index(s: SparkSession, dir: String): String = {
-    val vkey = Tables.versionedKey(s, dir, "documents")
-    Tables.stagedArtifact("bm25idx", dir, vkey) { base =>
-      buildBm25Index(s, dir, base)
-    }
-  }
-
-  /** Gate: BM25 retrieval served from the persisted postings index.
-    * Same query policy, same rational/fixed-point arithmetic, same
-    * results as [[bm25TopK]] (integers and strings round-trip parquet
-    * exactly) — shares its oracle verbatim. This is the 100 TB serving
-    * shape VERDICT r9 #1 demanded: per-query work is the query
-    * buckets' postings + a vocab-bounded df lookup, never a corpus
-    * tokenize. */
-  def bm25IndexTopK(s: SparkSession, dir: String): DataFrame =
-    bm25TopKFrom(s, stagedBm25Index(s, dir))
 
   /** Nightly-batch split for the incremental lexical index: tonight's
     * docs are doc_id % 10 = 3 (mirroring the vector index's batch
     * residue); everything else is the snapshot whose collection
     * statistics freeze. */
   val Bm25IncBatchPred = "doc_id % 10 = 3"
-
-  def stagedBm25IncIndex(s: SparkSession, dir: String): String = {
-    val vkey = Tables.versionedKey(s, dir, "documents")
-    Tables.stagedArtifact("bm25inc", dir, vkey) { base =>
-      buildBm25Index(s, dir, base, Some(s"NOT ($Bm25IncBatchPred)"))
-      appendBm25Batch(s, dir, base, Bm25IncBatchPred)
-      base
-    }
-  }
-
-  /** Gate: serving from the incrementally-maintained lexical index —
-    * snapshot postings + tonight's appended postings under FROZEN
-    * df/n_docs/total_len. The oracle computes the identical contract
-    * (stats/df over the snapshot docs, term frequencies over ALL docs,
-    * query terms from the frozen dfs), so the append path is proven
-    * hash-equal to a frozen-stats rebuild — lossless, not trusted. */
-  def bm25IndexIncTopK(s: SparkSession, dir: String): DataFrame =
-    bm25TopKFrom(s, stagedBm25IncIndex(s, dir))
-
-  /** Gate: serving from the COMPACTED incrementally-maintained lexical
-    * index — the small-files closure of the postings append (each
-    * nightly append leaves one file per write task per touched term
-    * bucket; [[graft.operators.Similarity.compactIvfIncIndex]] is the
-    * same crash-safe stage-then-publish compactor for ANY
-    * bounded-partition inverted layout, here keyed by `bucket`).
-    * Compaction moves rows between files, never changes them — shares
-    * the incremental gate's oracle verbatim. */
-  def stagedBm25CompactIndex(s: SparkSession, dir: String): String = {
-    val vkey = Tables.versionedKey(s, dir, "documents")
-    Tables.stagedArtifact("bm25cmp", dir, vkey) { base =>
-      buildBm25Index(s, dir, base, Some(s"NOT ($Bm25IncBatchPred)"))
-      appendBm25Batch(s, dir, base, Bm25IncBatchPred)
-      Similarity.compactIvfIncIndex(s, base,
-        rowSchema = Bm25PostingsSchema, partitionCol = "bucket")
-      base
-    }
-  }
-
-  def bm25IndexCompactTopK(s: SparkSession, dir: String): DataFrame =
-    bm25TopKFrom(s, stagedBm25CompactIndex(s, dir))
-
-  /** The IMMUTABLE snapshot half of the incremental lexical index
-    * (frozen stats trained without the batch, snapshot postings only)
-    * — staged once per corpus version; the streaming gate appends into
-    * per-call deltas beside it, as the vector indexes do. */
-  private[graft] def stagedBm25Snapshot(s: SparkSession, dir: String): String = {
-    val vkey = Tables.versionedKey(s, dir, "documents")
-    Tables.stagedArtifact("bm25snap", dir, vkey) { base =>
-      buildBm25Index(s, dir, base, Some(s"NOT ($Bm25IncBatchPred)"))
-    }
-  }
 
   /** Staleness bar for the frozen collection statistics: retrain when
     * a query term's document frequency grew ≥ [[Bm25DriftNum]]/
@@ -1457,7 +1398,7 @@ object TextAnalysis {
     * statically pruned to the query buckets, exactly like serving.
     * All integers → hash-exact oracle. */
   def bm25IndexDriftReport(s: SparkSession, dir: String): DataFrame =
-    bm25DriftFrom(s, stagedBm25IncIndex(s, dir))
+    bm25DriftFrom(s, Similarity.stagedIncIndex(Similarity.Bm25)(s, dir))
 
   private[graft] def bm25DriftFrom(s: SparkSession, base: String): DataFrame = {
     import s.implicits._
@@ -1467,8 +1408,7 @@ object TextAnalysis {
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
     val buckets = q.map(_._3).distinct.sorted.toSeq
     val terms = q.map(_._1).toSeq
-    val frozen = q.map { case (t, df, b) => (t, df, b) }.toSeq
-      .toDF("term", "df_frozen", "bucket")
+    val frozen = q.toSeq.toDF("term", "df_frozen", "bucket")
     s.read.schema(Bm25PostingsSchema).parquet(s"$base/postings")
       .filter(col("bucket").isInCollection(buckets) &&
         col("term").isInCollection(terms))
@@ -1478,32 +1418,6 @@ object TextAnalysis {
         (col("df_now") * lit(Bm25DriftDen) >
           col("df_frozen") * lit(Bm25DriftNum)).as("retrain"))
   }
-
-  /** COMPOSITE lexical-index lifecycle over ONE staged index — the
-    * [[graft.operators.Similarity.lifecycleTopK]] story for the
-    * BM25 postings: snapshot build (frozen stats — the only corpus
-    * tokenize) → tonight's docs as a real two-micro-batch STREAM of
-    * idempotent bucket appends → the drift report consults the
-    * maintained artifact and takes the append branch (loud require) →
-    * crash-safe bucket compaction → serving. Hash-equal to the
-    * frozen-stats rebuild — shares the incremental lexical oracle. */
-  def stagedBm25LifecycleIndex(s: SparkSession, dir: String): String = {
-    val vkey = Tables.versionedKey(s, dir, "documents")
-    Tables.stagedArtifact("bm25life", dir, vkey) { b =>
-      buildBm25Index(s, dir, b, Some(s"NOT ($Bm25IncBatchPred)"))
-      graft.streaming.Streams.runBm25AppendStream(s, dir, b)
-      val drift = bm25DriftFrom(s, b)
-      require(!drift.collect().exists(_.getAs[Boolean]("retrain")),
-        "lexical lifecycle gate expects the append branch; drifted " +
-          "collection stats must re-stat, not serve frozen")
-      Similarity.compactIvfIncIndex(s, b,
-        rowSchema = Bm25PostingsSchema, partitionCol = "bucket")
-      b
-    }
-  }
-
-  def bm25LifecycleTopK(s: SparkSession, dir: String): DataFrame =
-    bm25TopKFrom(s, stagedBm25LifecycleIndex(s, dir))
 
   /** Re-stat the maintained lexical index IN PLACE — the lexical
     * RETRAIN (the drift report detects df staleness; this executes
@@ -1516,7 +1430,7 @@ object TextAnalysis {
     * aggregates of an index already on disk — no corpus tokenize, no
     * postings rewrite. */
   def restatBm25Index(s: SparkSession, base: String): Unit = {
-    // stage-then-publish, the compactIvfIncIndex discipline: a direct
+    // stage-then-publish, the compactIndex discipline: a direct
     // overwrite deletes the live artifact before the new one lands, so
     // a crash mid-write would serve a HALF-WRITTEN stats/dfs silently.
     // Both stages write first (live artifacts untouched), then each
@@ -1531,23 +1445,14 @@ object TextAnalysis {
     def p(tail: String) = new org.apache.hadoop.fs.Path(s"$base/$tail")
     graft.sources.DirSwap.recover(fs, p("stats_restat_stage"), p("stats"))
     graft.sources.DirSwap.recover(fs, p("dfs_restat_stage"), p("dfs"))
-    val posts = s.read.schema(Bm25PostingsSchema).parquet(s"$base/postings")
-    posts.groupBy(col("doc_id")).agg(first(col("len")).as("len"))
-      .agg(count(lit(1)).as("n_docs"), sum(col("len")).as("total_len"))
-      .coalesce(1).write.mode("overwrite")
-      .parquet(s"$base/stats_restat_stage")
-    posts.groupBy(col("term")).agg(count(lit(1)).as("df"))
-      .withColumn("bucket", termBucket(col("term")))
-      // explicit width: exempt from AQE coalescing — see buildBm25Index
-      .repartition(Bm25Buckets, col("bucket"))
-      .write.mode("overwrite").partitionBy("bucket")
-      .parquet(s"$base/dfs_restat_stage")
+    writeBm25Stats(s.read.schema(Bm25PostingsSchema).parquet(s"$base/postings"),
+      s"$base/stats_restat_stage", s"$base/dfs_restat_stage")
     graft.sources.DirSwap.publish(fs, p("stats_restat_stage"), p("stats"))
     graft.sources.DirSwap.publish(fs, p("dfs_restat_stage"), p("dfs"))
   }
 
   /** Gate: the RE-STAT branch of the lexical lifecycle, end-to-end —
-    * the branch [[bm25LifecycleTopK]] loudly refuses. The gate plants
+    * the branch the lifecycle gate loudly refuses. The gate plants
     * the inverted split the drift spec uses: the SNAPSHOT is 1/10 of
     * the docs (collection statistics freeze there) and the appended
     * batch is the other 9/10, so the query terms' document frequency
@@ -1560,9 +1465,8 @@ object TextAnalysis {
     * postings are the same row multiset either way and every stat is
     * recomputed over all of them — shares the `text_bm25_index_topk`
     * oracle verbatim, so the re-stat path is proven lossless. */
-  def stagedBm25RestatIndex(s: SparkSession, dir: String): String = {
-    val vkey = Tables.versionedKey(s, dir, "documents")
-    Tables.stagedArtifact("bm25restat", dir, vkey) { base =>
+  def stagedBm25RestatIndex(s: SparkSession, dir: String): String =
+    Similarity.staged(Similarity.Bm25, "restat", s, dir) { base =>
       buildBm25Index(s, dir, base, Some(Bm25IncBatchPred))
       appendBm25Batch(s, dir, base, s"NOT ($Bm25IncBatchPred)")
       val drift = bm25DriftFrom(s, base)
@@ -1570,18 +1474,16 @@ object TextAnalysis {
         "re-stat gate expects stale collection statistics; an index " +
           "with fresh stats must append, not re-stat")
       restatBm25Index(s, base)
-      base
     }
-  }
 
   def bm25IndexRestatTopK(s: SparkSession, dir: String): DataFrame =
     bm25TopKFrom(s, stagedBm25RestatIndex(s, dir))
 
   // -------------------------------------------------------------------
-  // Two-night loop, LEXICAL family (VERDICT r14 #4): the
-  // decide→execute→verify×2 discipline over the BM25 postings — the
-  // maintained artifact whose heavy verb is the RE-STAT, not a
-  // retrain. Night N: tonight's docs tokenize in one narrow pass and
+  // Two-night loop, LEXICAL family: the decide→execute→verify×2
+  // discipline over the BM25 postings. It is its own loop, not the
+  // vector one, because the policy differs: the heavy verb is the
+  // RE-STAT, not a retrain, and it runs inside the loop. Night N: tonight's docs tokenize in one narrow pass and
   // their postings append into the term buckets under FROZEN
   // collection statistics → consult (df staleness against the frozen
   // dfs; small_files must fire — the append fattened the buckets) →
@@ -1636,12 +1538,11 @@ object TextAnalysis {
         "not clear the staleness consult")
     } else require(!stale(), s"lexical two-night loop: $label expected " +
       "the in-distribution append branch; stale stats must re-stat")
-    require(Similarity.fatLists(s, base, "bucket").nonEmpty,
+    require(Similarity.fatLists(Similarity.Bm25)(s, base).nonEmpty,
       s"lexical two-night loop: $label append left no fat buckets — " +
         "the small_files consult should fire")
-    Similarity.compactIvfIncIndex(s, base,
-      rowSchema = Bm25PostingsSchema, partitionCol = "bucket")
-    require(Similarity.fatLists(s, base, "bucket").isEmpty,
+    Similarity.compactIndex(Similarity.Bm25)(s, base)
+    require(Similarity.fatLists(Similarity.Bm25)(s, base).isEmpty,
       s"lexical two-night loop: $label compact did not clear the " +
         "small_files consult")
     bm25TopKFrom(s, base)
@@ -1652,17 +1553,14 @@ object TextAnalysis {
     * snapshot build (the only full-corpus tokenize of its half), then
     * the nightly cycle twice — night 1 frozen-stats, night 2 re-stat. */
   private[graft] def stagedBm25TwoNightIndex(s: SparkSession,
-      dir: String): String = {
-    val vkey = Tables.versionedKey(s, dir, "documents")
-    Tables.stagedArtifact("bm252night", dir, vkey) { base =>
+      dir: String): String =
+    Similarity.staged(Similarity.Bm25, "2night", s, dir) { base =>
       buildBm25Index(s, dir, base, Some(Bm25NightSnapPred))
       runBm25MaintenanceNight(s, dir, base, Bm25Night1Pred, "night1",
         expectRestat = false)
       runBm25MaintenanceNight(s, dir, base, Bm25Night2Pred, "night2",
         expectRestat = true)
-      base
     }
-  }
 
   /** Gate: both promotion points' lexical serving — night 1 under the
     * FROZEN snapshot statistics over snapshot ∪ night-1 postings,

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
 import java.sql.Timestamp
 import graft.operators.Similarity
-import graft.operators.Similarity.IvfFamily
+import graft.operators.Similarity.IndexFamily
 
 /** Structured Streaming transfers — the streaming form of the
   * reference's scheduled Transfer loop (reference: config.go:20-21
@@ -81,7 +81,7 @@ object Streams {
 
   /** Fresh per-call artifact dir, registered with the boundary janitor
     * (graft.TmpDirs) so a bench sweep cannot accumulate one copy per
-    * rep (ADVICE r9 #4). */
+    * rep. */
   private def callDir(tag: String): String = {
     val p = System.getProperty("java.io.tmpdir") + "/graft_" + tag + "_" + System.nanoTime
     graft.TmpDirs.register(p)
@@ -635,73 +635,32 @@ object Streams {
     s.read.parquet(s"$base/dst").drop("bid")
   }
 
-  /** Gate query: STREAMING maintenance of the LEXICAL index — the
-    * [[streamIndexAppend]] topology for the BM25 postings: the frozen-stats
-    * snapshot stages once per corpus version; tonight's documents land
-    * in two real micro-batches, each tokenizing ONLY its batch and
-    * appending its postings rows idempotently into a per-call delta's
-    * term buckets (bid-keyed purge-then-move — exactly-once in
-    * effect). Tokenize-and-append is stateless and additive, so
-    * micro-batch boundaries cannot change the final postings set:
-    * serving snapshot ∪ delta after the drain is bit-equal to the
-    * batch `text_bm25_index_incremental` gate — shared oracle. Doc
-    * text round-trips the ndjson hop exactly (string escaping). */
-  def streamBm25IndexAppend(s: SparkSession, dir: String): DataFrame = {
-    val snap = graft.operators.TextAnalysis.stagedBm25Snapshot(s, dir)
-    val delta = callDir("sbm25")
-    runBm25AppendStream(s, dir, delta)
-    graft.operators.TextAnalysis.bm25TopKFrom(s, snap, Some(delta))
-  }
-
-  /** The nightly document-batch append stream against term buckets at
-    * `base` — shared by the streaming gate (per-call delta) and the
-    * lexical lifecycle gate (appends into its own full index). */
-  private[graft] def runBm25AppendStream(s: SparkSession, dir: String,
-      base: String): Unit = {
-    val batch = graft.sources.Tables.documents(s, dir)
-      .filter(expr(graft.operators.TextAnalysis.Bm25IncBatchPred))
-      .select(col("doc_id"), col("text"))
-    new java.io.File(s"$base/src").mkdirs()
-    val t0 = System.currentTimeMillis()
-    stageNamedFile(batch.filter(col("doc_id") % 20 === 3),
-      s"$base/t0", s"$base/src/a_slice.json", t0 - 60000)
-    stageNamedFile(batch.filter(col("doc_id") % 20 =!= 3),
-      s"$base/t1", s"$base/src/b_slice.json", t0)
-    val in = s.readStream.schema("doc_id LONG, text STRING")
-      .option("maxFilesPerTrigger", 1).json(s"$base/src")
-    val q = in.writeStream.foreachBatch { (mb: DataFrame, bid: Long) =>
-      graft.operators.TextAnalysis.appendBm25Idempotent(s, base, mb, bid)
-      ()
-    }.option("checkpointLocation", s"$base/cp")
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-  }
-
   /** Gate query: STREAMING index maintenance — the nightly append as a
-    * vector stream, for either index family: the snapshot index (frozen
-    * quantizer [+ codebook] and snapshot postings) stages once per
-    * corpus version; tonight's arrivals land in TWO real micro-batches
-    * (maxFilesPerTrigger=1 over two staged slices), each assigning
-    * [and encoding] against the frozen artifact headers and appending
-    * its postings files into a per-call DELTA — exactly-once via the
-    * checkpoint. Assignment is stateless and appends are additive, so
-    * micro-batch boundaries cannot change the final postings SET:
+    * stream, for any index family: the snapshot index (frozen quantizer
+    * [+ codebook], or frozen collection statistics, and snapshot
+    * postings) stages once per corpus version; tonight's arrivals land
+    * in TWO real micro-batches (maxFilesPerTrigger=1 over two staged
+    * slices), each assigning [and encoding] against the frozen artifact
+    * headers, or tokenizing only its batch, and appending its postings
+    * files into a per-call DELTA — exactly-once via the checkpoint.
+    * Assignment and tokenizing are stateless and appends are additive,
+    * so micro-batch boundaries cannot change the final postings SET:
     * serving snapshot ∪ delta after the drain is bit-equal to the
     * family's batch incremental gate and shares its oracle verbatim.
     * This is the production topology — last night's immutable artifact
     * plus tonight's arrivals, a continuous crawl feeding list
     * partitions while serving reads a consistent snapshot of them; the
-    * compactor ([[graft.operators.Similarity.compactIvfIncIndex]])
-    * absorbs the per-batch small files, and a bench rep pays only the
-    * marginal append, not a rebuild. Float arrays survive the ndjson
-    * hop bit-exactly (shortest-roundtrip rendering, as
-    * streamAnnServing). */
-  def streamIndexAppend(f: IvfFamily)(
+    * compactor ([[graft.operators.Similarity.compactIndex]]) absorbs
+    * the per-batch small files, and a bench rep pays only the marginal
+    * append, not a rebuild. Float arrays and doc text survive the
+    * ndjson hop bit-exactly (shortest-roundtrip rendering, as
+    * streamAnnServing; string escaping). */
+  def streamIndexAppend(f: IndexFamily)(
       s: SparkSession, dir: String): DataFrame = {
     val snap = Similarity.stagedSnapshot(f)(s, dir)
     val delta = callDir(s"s${f.name}idx")
     runIndexAppendStream(f)(s, dir, delta, snap)
-    Similarity.serveIndex(f)(s, dir, snap, deltaBase = Some(delta))
+    f.serveFrom(s, dir, snap, Some(delta))
   }
 
   /** The nightly-batch append STREAM against an existing snapshot
@@ -711,23 +670,22 @@ object Streams {
     * first, so the append is exactly-once in effect). Shared by the
     * streaming gate and the composite lifecycle gate, so both drive the
     * SAME topology. */
-  private[graft] def runIndexAppendStream(f: IvfFamily)(
+  private[graft] def runIndexAppendStream(f: IndexFamily)(
       s: SparkSession, dir: String, base: String,
       artifactBase: String = null): Unit = {
     val art = Option(artifactBase).getOrElse(base)
-    val batch = graft.sources.Tables.embeddings(s, dir)
-      .filter(expr(Similarity.IvfIncBatchPred))
-      .select(col("vec_id").as("cand_id"), col("embedding").as("c_emb"))
+    val batch = f.arrivals(s, dir)
+    val id = col(batch.columns.head)
     new java.io.File(s"$base/src").mkdirs()
     val t0 = System.currentTimeMillis()
-    stageNamedFile(batch.filter(col("cand_id") % 20 === 3),
+    stageNamedFile(batch.filter(id % 20 === 3),
       s"$base/t0", s"$base/src/a_slice.json", t0 - 60000)
-    stageNamedFile(batch.filter(col("cand_id") % 20 =!= 3),
+    stageNamedFile(batch.filter(id % 20 =!= 3),
       s"$base/t1", s"$base/src/b_slice.json", t0)
-    val in = s.readStream.schema("cand_id LONG, c_emb ARRAY<FLOAT>")
+    val in = s.readStream.schema(batch.schema)
       .option("maxFilesPerTrigger", 1).json(s"$base/src")
     val q = in.writeStream.foreachBatch { (mb: DataFrame, bid: Long) =>
-      Similarity.appendVectorsIdempotent(f)(s, base, mb, bid, art)
+      f.appendIdempotent(s, base, mb, bid, art)
       ()
     }.option("checkpointLocation", s"$base/cp")
       .trigger(Trigger.AvailableNow()).start()

@@ -1058,7 +1058,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
     val retrain = Similarity.driftReportFrom(Similarity.Ivf)(spark, sf, base)
       .head().getAs[Boolean]("retrain")
     assert(!retrain, "gate corpus must take the append branch")
-    val compacted = Similarity.compactIvfIncIndex(spark, base)
+    val compacted = Similarity.compactIndex(Similarity.Ivf)(spark, base)
     assert(compacted.nonEmpty,
       "the streamed appends must have fattened at least one list")
     val served = Similarity.serveIndex(Similarity.Ivf)(spark, sf, base)
@@ -1276,7 +1276,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
     // force both lifecycle artifacts (each builds/maintains at most
     // once per corpus version), then prove the fusion itself is pure
     // artifact consumption
-    graft.operators.TextAnalysis.stagedBm25LifecycleIndex(spark, sf)
+    Similarity.stagedLifecycleIndex(Similarity.Bm25)(spark, sf)
     Similarity.stagedLifecycleIndex(Similarity.Ivf)(spark, sf)
     val trained = Similarity.trainingBuilds.get()
     val fused = Similarity.hybridLifecycleTopK(spark, sf).collect()
@@ -1396,7 +1396,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
     val thin = before.filter(_._2.size <= 1).keySet
     assert(before.exists(_._2.size > 1), "appended index must have multi-file lists to compact")
     val served0 = Similarity.serveIndex(Similarity.Ivf)(spark, sf, base).collect().map(_.toString).toSet
-    val compacted = Similarity.compactIvfIncIndex(spark, base)
+    val compacted = Similarity.compactIndex(Similarity.Ivf)(spark, base)
     assert(compacted.nonEmpty, "compactor must select the fat lists")
     val after = dirs(s"$base/postings")
     after.foreach { case (d, fsAfter) =>
@@ -1425,8 +1425,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
     assert(before.exists(_._2.size > 1), "appended PQ index must have multi-file lists")
     val served0 = Similarity.serveIndex(Similarity.IvfPq)(spark, sf, base)
       .collect().map(_.toString).toSet
-    val compacted = Similarity.compactIvfIncIndex(spark, base,
-      rowSchema = Similarity.PqPostingsSchema)
+    val compacted = Similarity.compactIndex(Similarity.IvfPq)(spark, base)
     assert(compacted.nonEmpty, "compactor must select the fat code lists")
     dirs(s"$base/postings").foreach { case (d, fsAfter) =>
       if (thin(d))
@@ -1658,20 +1657,18 @@ class DedupSimilaritySpec extends AnyFunSuite {
     // the foreachBatch failure mode: batch commits its files, the
     // streaming offset does not, the batch REPLAYS — a blind append
     // would duplicate every row; the bid-keyed publish must converge
-    for (f <- Seq(Similarity.Ivf, Similarity.IvfPq)) {
+    for (f <- Seq(Similarity.Ivf, Similarity.IvfPq, Similarity.Bm25)) {
       val base = s"${System.getProperty("java.io.tmpdir")}/graft_spec_idem_${f.name}_${System.nanoTime}"
       Similarity.buildSnapshot(f)(spark, sf, base)
-      val batch = Tables.embeddings(spark, sf)
-        .filter(expr(graft.operators.Similarity.IvfIncBatchPred))
-        .select(col("vec_id").as("cand_id"), col("embedding").as("c_emb"))
-      Similarity.appendVectorsIdempotent(f)(spark, base, batch, 7L)
+      val batch = f.arrivals(spark, sf)
+      f.appendIdempotent(spark, base, batch, 7L, base)
       val n1 = spark.read.parquet(s"$base/postings").count()
-      val served1 = Similarity.serveIndex(f)(spark, sf, base)
+      val served1 = f.serveFrom(spark, sf, base)
         .collect().map(_.toString).toSet
-      Similarity.appendVectorsIdempotent(f)(spark, base, batch, 7L) // replay
+      f.appendIdempotent(spark, base, batch, 7L, base) // replay
       assert(spark.read.parquet(s"$base/postings").count() == n1,
         "replaying the same bid must not add rows")
-      assert(Similarity.serveIndex(f)(spark, sf, base)
+      assert(f.serveFrom(spark, sf, base)
         .collect().map(_.toString).toSet == served1,
         "serving must be unchanged after a replay")
       // and the result equals the batch-maintained index
@@ -1680,13 +1677,13 @@ class DedupSimilaritySpec extends AnyFunSuite {
     }
   }
 
-  for (f <- Seq(Similarity.Ivf, Similarity.IvfPq))
+  for (f <- Seq(Similarity.Ivf, Similarity.IvfPq, Similarity.Bm25))
     test(s"compaction crash recovery (${f.name}): a complete stage publishes, a partial one is discarded") {
       val clean = Similarity.compactTopK(f)(spark, sf).collect().map(_.toString).toSet
       for (complete <- Seq(true, false)) {
         val base = s"${System.getProperty("java.io.tmpdir")}/graft_spec_cmpcrash_${f.name}_${System.nanoTime}"
         Similarity.buildIncIndex(f)(spark, sf, base)
-        val fat = Similarity.fatLists(spark, base)
+        val fat = Similarity.fatLists(f)(spark, base)
         assert(fat.nonEmpty, "the appended index must have fat lists")
         def rows() = spark.read.schema(f.rowSchema).parquet(s"$base/postings").count()
         val nRows = rows()
@@ -1695,19 +1692,19 @@ class DedupSimilaritySpec extends AnyFunSuite {
         // write itself died part way (a partial stage, no _SUCCESS)
         val stage = s"$base/postings_compact_stage"
         val fatRows = spark.read.schema(f.rowSchema).parquet(s"$base/postings")
-          .filter(col("cent_id").isInCollection(fat))
+          .filter(col(f.partitionCol).isInCollection(fat))
         (if (complete) fatRows else fatRows.limit(1))
-          .write.mode("overwrite").partitionBy("cent_id").parquet(stage)
+          .write.mode("overwrite").partitionBy(f.partitionCol).parquet(stage)
         if (!complete) assert(new java.io.File(s"$stage/_SUCCESS").delete())
-        val compacted = Similarity.compactIvfIncIndex(spark, base, rowSchema = f.rowSchema)
+        val compacted = Similarity.compactIndex(f)(spark, base)
         // a published stage already collapsed the fat lists; a discarded
         // one leaves them for the compaction proper
         assert(compacted.isEmpty == complete,
           s"complete=$complete: compactor selected ${compacted.mkString(",")}")
         assert(!new java.io.File(stage).exists(), "the stage must be gone")
         assert(rows() == nRows, s"complete=$complete: recovery must keep every postings row")
-        assert(Similarity.fatLists(spark, base).isEmpty, "every list must be one file")
-        assert(Similarity.serveIndex(f)(spark, sf, base).collect().map(_.toString).toSet == clean,
+        assert(Similarity.fatLists(f)(spark, base).isEmpty, "every list must be one file")
+        assert(f.serveFrom(spark, sf, base).collect().map(_.toString).toSet == clean,
           s"complete=$complete: recovered serving must equal a clean compaction's")
       }
     }
@@ -1827,8 +1824,8 @@ class DedupSimilaritySpec extends AnyFunSuite {
     // odometer below isolates what the executor itself may train: at
     // most the escalation's rebuild (the dedup-routed retrain), and
     // nothing at all on the second nightly run
-    graft.operators.TextAnalysis.stagedBm25IncIndex(spark, sf)
-    graft.operators.TextAnalysis.stagedBm25CompactIndex(spark, sf)
+    Similarity.stagedIncIndex(Similarity.Bm25)(spark, sf)
+    Similarity.stagedCompactIndex(Similarity.Bm25)(spark, sf)
     Similarity.stagedIncIndex(Similarity.Ivf)(spark, sf)
     Similarity.stagedCompactIndex(Similarity.Ivf)(spark, sf)
     Similarity.stagedIncIndex(Similarity.IvfPq)(spark, sf)
@@ -2076,7 +2073,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
     val rep = Similarity.imbalanceFrom(Similarity.Ivf)(spark, base).head()
     assert(!rep.getAs[Boolean]("retrain"),
       s"the dedup-rebuilt index must read balanced: $rep")
-    assert(Similarity.fatLists(spark, base).isEmpty,
+    assert(Similarity.fatLists(Similarity.Ivf)(spark, base).isEmpty,
       "a full rewrite leaves one file per list")
     CacheScope.releaseAll(spark)
   }

@@ -5,13 +5,12 @@ import java.nio.file.{Files, Paths}
 import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.Similarity
 import graft.plans.Pipeline
 import graft.plans.Pipeline._
-import graft.sources.{DirSwap, NioRawLocalFileSystem, Tables}
+import graft.sources.{DirSwap, NioRawLocalFileSystem}
 
 /** The local filesystem under its own `faultfs` scheme, whose renames
   * of committed paths fail on demand. A Spark task commit's moves out
@@ -77,22 +76,30 @@ class RenameFaultSpec extends AnyFunSuite {
       .filter(p => Files.exists(Paths.get(p)))
 
   test("a refused rename fails the idempotent index append loudly; the prior postings still serve") {
-    for (f <- Seq(Similarity.Ivf, Similarity.IvfPq)) {
+    for (f <- Seq(Similarity.Ivf, Similarity.IvfPq, Similarity.Bm25)) {
       val base = tmp(s"idx_${f.name}")
       Similarity.buildSnapshot(f)(spark, sf, base)
-      val served = Similarity.serveIndex(f)(spark, sf, base).collect().map(_.toString).toSet
-      val batch = Tables.embeddings(spark, sf)
-        .filter(expr(Similarity.IvfIncBatchPred))
-        .select(col("vec_id").as("cand_id"), col("embedding").as("c_emb"))
+      val served = f.serveFrom(spark, sf, base).collect().map(_.toString).toSet
+      val batch = f.arrivals(spark, sf)
       val e = intercept[IllegalArgumentException] {
         FaultFs.armed(FaultFs.Refuse) {
-          Similarity.appendVectorsIdempotent(f)(spark, faulty(base), batch, 3L, base)
+          f.appendIdempotent(spark, faulty(base), batch, 3L, base)
         }
       }
       assert(e.getMessage.contains("could not publish"), e.getMessage)
-      assert(Similarity.serveIndex(f)(spark, sf, base).collect().map(_.toString).toSet == served,
+      assert(f.serveFrom(spark, sf, base).collect().map(_.toString).toSet == served,
         s"${f.name}: the prior postings must still serve unchanged")
     }
+  }
+
+  test("a refused rename fails the route-file shard staging loudly") {
+    val base = tmp("route")
+    val e = intercept[IllegalArgumentException] {
+      FaultFs.armed(FaultFs.Refuse) {
+        graft.operators.Etl.stageRouteShards(spark, sf, faulty(base))
+      }
+    }
+    assert(e.getMessage.contains("could not stage"), e.getMessage)
   }
 
   test("a refused rename fails the quarantine promote loudly; the prior target stays readable") {

@@ -398,9 +398,9 @@ class StreamingPipelineSpec extends AnyFunSuite {
   test("streaming BM25 append serves bit-equal to the batch incremental path") {
     // the lexical twin: micro-batched tokenize-and-append under frozen
     // collection stats must land the identical postings set
-    val streamed = Streams.streamBm25IndexAppend(spark, sf)
+    val streamed = Streams.streamIndexAppend(graft.operators.Similarity.Bm25)(spark, sf)
       .collect().map(_.toString).toSet
-    val batch = graft.operators.TextAnalysis.bm25IndexIncTopK(spark, sf)
+    val batch = graft.operators.Similarity.incTopK(graft.operators.Similarity.Bm25)(spark, sf)
       .collect().map(_.toString).toSet
     assert(streamed == batch,
       "stream-maintained lexical index serving must equal the batch-maintained one")

@@ -775,7 +775,7 @@ class TextMultimodalSpec extends AnyFunSuite {
 
   test("persisted BM25 index: serving bit-equal, reads index files only, statically pruned") {
     val mem = TextAnalysis.bm25TopK(spark, sf).collect().map(_.toString).toSet
-    val idx = TextAnalysis.bm25IndexTopK(spark, sf)
+    val idx = Similarity.indexTopK(Similarity.Bm25)(spark, sf)
     assert(idx.collect().map(_.toString).toSet == mem,
       "postings-index serving must equal the corpus-recompute BM25 results")
     val plan = idx.queryExecution.executedPlan.toString
@@ -832,14 +832,12 @@ class TextMultimodalSpec extends AnyFunSuite {
       s"appended postings must be exactly the batch docs' (doc, term) rows")
     // serving from the maintained index matches the gate
     val served = TextAnalysis.bm25TopKFrom(spark, base).collect().map(_.toString).toSet
-    val gate = TextAnalysis.bm25IndexIncTopK(spark, sf).collect().map(_.toString).toSet
+    val gate = Similarity.incTopK(Similarity.Bm25)(spark, sf).collect().map(_.toString).toSet
     assert(served == gate, "spec-built index must serve the gate results")
     // --- compaction: fat buckets collapse, thin buckets untouched,
     // serving bit-equal before and after ---
     val preCompact = listing(s"$base/postings")
-    val fat = graft.operators.Similarity.compactIvfIncIndex(spark, base,
-      rowSchema = "term STRING, doc_id BIGINT, tf BIGINT, len BIGINT, bucket BIGINT",
-      partitionCol = "bucket")
+    val fat = Similarity.compactIndex(Similarity.Bm25)(spark, base)
     assert(fat.nonEmpty, "the append must have fattened at least one bucket")
     fat.foreach { b =>
       val files = new java.io.File(s"$base/postings/bucket=$b").listFiles()
@@ -904,7 +902,7 @@ class TextMultimodalSpec extends AnyFunSuite {
     // fresh stats over the full postings ≡ the one-shot full build
     val served = TextAnalysis.bm25TopKFrom(spark, base)
       .collect().map(_.toString).toSet
-    val full = TextAnalysis.bm25IndexTopK(spark, sf)
+    val full = Similarity.indexTopK(Similarity.Bm25)(spark, sf)
       .collect().map(_.toString).toSet
     assert(served == full,
       "re-stat serving must equal the one-shot full-corpus build")
